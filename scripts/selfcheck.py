@@ -6,7 +6,9 @@ Usage: python3 scripts/selfcheck.py <sfDir> <verifyOutDir> [query ...]
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs
 the matching oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over
 the raw testdata tables, sorts columns by name (the driver's convention),
-and compares row-for-row. Exit code = number of mismatched queries.
+and compares row-for-row. A query that graft.Verify recorded as failed
+(<verifyOutDir>/<name>.failed.json) fails with the recorded cause. Exit
+code = number of mismatched queries.
 """
 import sys, json, math, os
 import duckdb
@@ -38,8 +40,18 @@ def main():
         if only and name not in only:
             continue
         res_dir = os.path.join(out_dir, name)
-        if not os.path.isdir(res_dir):
-            print(f"FAIL {name}: no spark output"); fails += 1; continue
+        failed = os.path.join(out_dir, f"{name}.failed.json")
+        if os.path.exists(failed) or not os.path.isdir(res_dir):
+            # a failure record means this run wrote no result, even if an
+            # older run's result is still in the directory
+            cause = ""
+            if os.path.exists(failed):
+                rec = json.load(open(failed))
+                top = f"{rec['exception']}: {rec['message']}"
+                cause = f"; verify failed: {top}"
+                if rec["root_cause"] != top:
+                    cause += f" (root cause {rec['root_cause']})"
+            print(f"FAIL {name}: no spark output{cause}"); fails += 1; continue
         try:
             s = con.execute(f"SELECT * FROM read_parquet('{res_dir}/*.parquet')")
             s_cols = [d[0] for d in s.description]; s_rows = s.fetchall()

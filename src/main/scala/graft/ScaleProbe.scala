@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Tables
+import graft.ops.{Tables, TempDirs}
 import graft.pipeline.Features
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -15,21 +15,6 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleProbe [sfDir] [multiples...]
   */
 object ScaleProbe {
-
-  /** Probe scratch is JVM-lifetime only — every widened corpus dir is
-    * reclaimed on exit (the Media.stageDecodable pattern), so repeated
-    * probe runs don't accrete multi-MB temp dirs.
-    */
-  private def scratchDir(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case scala.util.control.NonFatal(_) => () }))
-    p
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -59,7 +44,7 @@ object ScaleProbe {
     // materialize each multiple once so the probe times the pipeline, not
     // repeated parquet decodes of the same file
     def widened(m: Int) = {
-      val out = s"${scratchDir("graft_scale_")}/ev"
+      val out = s"${TempDirs.tempDirUntilExit("graft_scale_")}/ev"
       (0 until m)
         .map(i => base.withColumn("user_id", col("user_id") + lit(i * nUsers)))
         .reduce(_ union _)
@@ -102,7 +87,7 @@ object ScaleProbe {
     val docsBase = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docsBase.agg(max("doc_id")).head().getLong(0) + 1
     def widenedDocs(m: Int): String = {
-      val out = s"${scratchDir("graft_scale_d_")}"
+      val out = s"${TempDirs.tempDirUntilExit("graft_scale_d_")}"
       (0 until m)
         .map(i =>
           docsBase
@@ -227,7 +212,7 @@ object ScaleProbe {
     val embBase = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val nVecs = embBase.agg(max("vec_id")).head().getLong(0) + 1
     def widenedEmb(m: Int): String = {
-      val out = s"${scratchDir("graft_scale_e_")}"
+      val out = s"${TempDirs.tempDirUntilExit("graft_scale_e_")}"
       (0 until m)
         .map { i =>
           embBase
@@ -295,7 +280,7 @@ object ScaleProbe {
       .select(TimeCodec.dayInt(col("ts")).as("day"))
       .distinct()
     def widenedDayFacts(m: Int): String = {
-      val out = s"${scratchDir("graft_scale_p_")}/facts"
+      val out = s"${TempDirs.tempDirUntilExit("graft_scale_p_")}/facts"
       (0 until m)
         .map(i => base.withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 90} DAYS")))
         .reduce(_ union _)
@@ -449,7 +434,7 @@ object ScaleProbe {
       val oMor = Tables.orders(spark, sfDir).select(
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
-      val morDir = scratchDir("graft_scale_mor_")
+      val morDir = TempDirs.tempDirUntilExit("graft_scale_mor_")
       oMor.repartition(8).write.parquet(s"$morDir/data")
       val morData = spark.read.parquet(s"$morDir/data").withColumn("fseq", lit(1L))
       val rowsMor = morData.count()
@@ -495,7 +480,7 @@ object ScaleProbe {
       val evFull = Tables.events(spark, sfDir)
         .select("event_id", "ts", "user_id", "value")
       def widenedEventsDir(m: Int): String = {
-        val dir = scratchDir("graft_scale_s47_").toString
+        val dir = TempDirs.tempDirUntilExit("graft_scale_s47_").toString
         (0 until m)
           .map(i => evFull.withColumn("user_id", col("user_id") + lit(i * nUsers))
             .withColumn("event_id", col("event_id") + lit(i * 10000000L)))
@@ -532,7 +517,7 @@ object ScaleProbe {
     // would track m² in pairs and time.
     if (enabled("interval")) {
       def widenedIntervalEvents(m: Int): String = {
-        val out = s"${scratchDir("graft_scale_i_")}"
+        val out = s"${TempDirs.tempDirUntilExit("graft_scale_i_")}"
         (0 until m)
           .map(i => base.withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 90} DAYS")))
           .reduce(_ union _)
@@ -597,7 +582,7 @@ object ScaleProbe {
     if (enabled("census")) {
       val evFull = Tables.events(spark, sfDir) // q145 needs event_type too
       def widenedEventsDir(m: Int): String = {
-        val out = s"${scratchDir("graft_scale_c_")}"
+        val out = s"${TempDirs.tempDirUntilExit("graft_scale_c_")}"
         (0 until m)
           .map(i => evFull.withColumn("user_id", col("user_id") + lit(i * nUsers)))
           .reduce(_ union _)
@@ -639,7 +624,7 @@ object ScaleProbe {
       val ordersBase = spark.read.parquet(s"$sfDir/orders.parquet")
       val nOrders = ordersBase.agg(max("o_orderkey")).head().getLong(0) + 1
       def widenedOrdersDir(m: Int): String = {
-        val out = s"${scratchDir("graft_scale_m_")}"
+        val out = s"${TempDirs.tempDirUntilExit("graft_scale_m_")}"
         (0 until m)
           .map(i =>
             ordersBase
@@ -718,7 +703,7 @@ object ScaleProbe {
       val nCust = ordersBase2.agg(max("o_custkey")).head().getLong(0) + 1
       val nOrd = ordersBase2.agg(max("o_orderkey")).head().getLong(0) + 1
       def widenedCustOrdersDir(m: Int): String = {
-        val out = s"${scratchDir("graft_scale_g_")}"
+        val out = s"${TempDirs.tempDirUntilExit("graft_scale_g_")}"
         (0 until m)
           .map(i =>
             ordersBase2
@@ -731,7 +716,7 @@ object ScaleProbe {
       }
       val evFull2 = Tables.events(spark, sfDir)
       def widenedUserEventsDir(m: Int): String = {
-        val out = s"${scratchDir("graft_scale_u_")}"
+        val out = s"${TempDirs.tempDirUntilExit("graft_scale_u_")}"
         (0 until m)
           .map(i => evFull2.withColumn("user_id", col("user_id") + lit(i * nUsers)))
           .reduce(_ union _)
@@ -858,7 +843,7 @@ object ScaleProbe {
       val evB = Tables.events(spark, sfDir)
       val nEv = evB.agg(max("event_id")).head().getLong(0) + 1
       def widenedRowsDir(m: Int): String = {
-        val out = s"${scratchDir("graft_scale_s_")}"
+        val out = s"${TempDirs.tempDirUntilExit("graft_scale_s_")}"
         (0 until m)
           .map(i =>
             evB
@@ -926,7 +911,7 @@ object ScaleProbe {
         dst.setLastModified(mtime)
       }
       def widenedEpochs(m: Int): String = {
-        val dir = scratchDir("graft_scale_e_").toString
+        val dir = TempDirs.tempDirUntilExit("graft_scale_e_").toString
         def copies(df: org.apache.spark.sql.DataFrame, idCol: String, n: Long, fresh: Boolean) =
           (0 until m)
             .map { i =>
@@ -938,14 +923,14 @@ object ScaleProbe {
             .reduce(_ unionAll _)
         // s34 epochs: per-epoch m× vectors; exactly one copy of the
         // vec_id<8 seed set (copy 0's) so the initial codebook stays K=8
-        val eBase = scratchDir("graft_scale_e34_").toString
+        val eBase = TempDirs.tempDirUntilExit("graft_scale_e34_").toString
         writeOne(copies(emb.filter(col("vec_id") < 250), "vec_id", nVec, fresh = false),
           eBase, "0.parquet", 1000000L)
         writeOne(copies(emb.filter(col("vec_id") >= 250), "vec_id", nVec, fresh = false),
           eBase, "1.parquet", 2000000L)
         graft.streaming.StreamAssign.registerStaged(dir, eBase)
         // s36 epochs: per-epoch m× docs with per-copy-renamed vocabulary
-        val dBase = scratchDir("graft_scale_e36_").toString
+        val dBase = TempDirs.tempDirUntilExit("graft_scale_e36_").toString
         writeOne(copies(docs.filter(col("doc_id") < 250), "doc_id", nDoc, fresh = true),
           dBase, "0.parquet", 1000000L)
         writeOne(copies(docs.filter(col("doc_id") >= 250), "doc_id", nDoc, fresh = true),
@@ -1009,7 +994,7 @@ object ScaleProbe {
     // (the one leg that touches data) over real files.
     if (enabled("tablefmt")) {
       import graft.sinks.SnapshotLog
-      val logDir = scratchDir("graft_scale_log_")
+      val logDir = TempDirs.tempDirUntilExit("graft_scale_log_")
       // (a) commit + planning vs manifest size — one snapshot per
       // multiple, 64·m entries, bucket stats recorded for pruning
       val dbA = s"$logDir/a.duckdb"
@@ -1065,7 +1050,7 @@ object ScaleProbe {
       val oPos = Tables.orders(spark, sfDir).select(
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
-      val posDir = scratchDir("graft_scale_pos_")
+      val posDir = TempDirs.tempDirUntilExit("graft_scale_pos_")
       oPos.repartition(8).write.parquet(s"$posDir/data")
       val posData = spark.read.parquet(s"$posDir/data")
         .withColumn("fseq", lit(1L))
@@ -1111,7 +1096,7 @@ object ScaleProbe {
     // of recording min/max stats.
     if (enabled("skipping")) {
       import graft.sinks.SnapshotLog
-      val logDir = scratchDir("graft_scale_skip_")
+      val logDir = TempDirs.tempDirUntilExit("graft_scale_skip_")
       val dbS = s"$logDir/s.duckdb"
       SnapshotLog.initLog(dbS)
       SnapshotLog.initColStats(dbS)
@@ -1247,7 +1232,7 @@ object ScaleProbe {
       val nb = 128L
       val bw = (mxv - mn) / nb + 1L
       val (lo, hi) = (mn, mn + 8L * bw - 1L)
-      val skipDir = scratchDir("graft_scale_skipread_")
+      val skipDir = TempDirs.tempDirUntilExit("graft_scale_skipread_")
       oSkip.withColumn("g", pmod(col("k"), lit(nb)))
         .repartition(col("g")).write.partitionBy("g").parquet(s"$skipDir/u")
       oSkip.withColumn("g", expr(s"(cents - $mn) div $bw"))

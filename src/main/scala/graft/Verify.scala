@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws writes `<name>.failed.json` (name, exception class, message,
+  * root cause) in place of its result. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -19,16 +21,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -41,6 +33,28 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    new java.io.File(outDir).mkdirs()
+    SparkEntry.queries
+      .filter { case (name, _) => only.isEmpty || only.contains(name) }
+      .foreach { case (name, fn) =>
+      // a failure is recorded beside the results with its cause, so a
+      // missing result explains itself; a success clears an old record
+      val failed = Paths.get(s"$outDir/$name.failed.json")
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        Files.deleteIfExists(failed)
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+        Files.writeString(failed, Seq(
+          "name" -> name,
+          "exception" -> e.getClass.getName,
+          "message" -> String.valueOf(e.getMessage),
+          "root_cause" -> s"${root.getClass.getName}: ${root.getMessage}")
+          .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}\n"))
+      }
+    }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

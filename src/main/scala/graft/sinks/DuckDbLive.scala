@@ -14,13 +14,18 @@ import scala.util.control.NonFatal
   * the commit cadence), re-expressed against the public
   * `org.duckdb:duckdb_jdbc` driver.
   *
-  * The binding is deliberately REFLECTIVE and OPTIONAL: the jar is
-  * discovered in the machine-local artifact caches (the same pre-warmed,
-  * offline cache the test dependencies resolve from — no remote fetch, no
-  * repository host named anywhere) and loaded in a child classloader, so
-  * `build.sbt`'s dependency set stays fixed and every caller degrades to
-  * the open-format handshake (parquet + generated DDL/`read_parquet`
-  * INSERT, `DuckDbSink.write`) when no jar is present.
+  * The binding is deliberately REFLECTIVE: the jar is discovered in the
+  * machine-local artifact caches (the same pre-warmed, offline cache the
+  * test dependencies resolve from — no remote fetch, no repository host
+  * named anywhere) and loaded in a child classloader, so `build.sbt`'s
+  * dependency set stays fixed.
+  *
+  * Without a jar, `available` is false and every connection attempt
+  * throws `IllegalStateException("duckdb_jdbc not present in the local
+  * artifact cache")`. This is the one place that decides: an entry that
+  * needs DuckDB fails at its first connection with that cause (which
+  * `graft.Verify` records as `<out>/<name>.failed.json`), never with a
+  * substitute result.
   *
   * Type coverage mirrors the reference's full appender map
   * (`DatabaseWriter.cs:299-315`): integral widths, float32/float64,
@@ -205,19 +210,18 @@ object DuckDbLive {
     * parameter-index BASE for its row (0 for the first row in a
     * statement, `arity` for the second, ...).
     *
-    * `sql` must have the shape `INSERT INTO <t> VALUES (?, ...)` —
-    * the template after VALUES is replicated per chunk row.
+    * `prefix` is the statement up to and including `VALUES`
+    * (`INSERT INTO t VALUES`) and `tuple` is one row's parameter
+    * template (`(?, ?)`), replicated per chunk row. They arrive apart so
+    * no table or column name is ever searched for the `VALUES` keyword.
     */
   def insertRows[A](
       conn: Connection,
-      sql: String,
+      prefix: String,
+      tuple: String,
       rows: Seq[A])(bind: (java.sql.PreparedStatement, Int, A) => Unit): Unit =
     if (rows.nonEmpty) {
-      val vIdx = sql.toUpperCase.indexOf("VALUES")
-      require(vIdx >= 0, s"insertRows needs an INSERT ... VALUES statement, got: $sql")
-      val prefix = sql.substring(0, vIdx + "VALUES".length)
-      val template = sql.substring(vIdx + "VALUES".length).trim
-      val arity = template.count(_ == '?')
+      val arity = tuple.count(_ == '?')
       val prevAuto = conn.getAutoCommit
       conn.setAutoCommit(false)
       try {
@@ -226,7 +230,7 @@ object DuckDbLive {
           if (prepared._1 != n) {
             if (prepared._2 != null) prepared._2.close()
             prepared = (n, conn.prepareStatement(
-              prefix + " " + Seq.fill(n)(template).mkString(", ")))
+              prefix + " " + Seq.fill(n)(tuple).mkString(", ")))
           }
           prepared._2
         }

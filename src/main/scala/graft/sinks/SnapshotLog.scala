@@ -79,19 +79,10 @@ object SnapshotLog {
     * accumulated ~150 hooks and dozens of copies across a bench sweep —
     * real disk pressure at larger SFs.
     */
-  private def withTempTableDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
-    val base = java.nio.file.Files.createTempDirectory(prefix)
+  private def withTempTableDir[A](prefix: String)(body: java.nio.file.Path => A): A =
     // connection reuse for the lifecycle's metadata calls; the scope
-    // closes every cached connection BEFORE the finally deletes the files
-    try DuckDbLive.cachingScope(body(base))
-    finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
+    // closes every cached connection BEFORE the temp dir is deleted
+    graft.ops.TempDirs.withTempDir(prefix)(base => DuckDbLive.cachingScope(body(base)))
 
   /** Insert manifest rows via PreparedStatement — paths are DATA, never
     * spliced into SQL text (an apostrophe in a path must not be able to
@@ -239,7 +230,7 @@ object SnapshotLog {
 
   private[graft] def recordStats(dbFile: String, stats: Seq[(String, Long)]): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_stats VALUES (?, ?)", stats) {
+      DuckDbLive.insertRows(c, "INSERT INTO file_stats VALUES", "(?, ?)", stats) {
         (ps, o, r) =>
           ps.setString(o + 1, r._1)
           ps.setLong(o + 2, r._2)
@@ -362,7 +353,7 @@ object SnapshotLog {
 
   private[graft] def recordSeq(dbFile: String, paths: Seq[String], seq: Long): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_seq VALUES (?, ?)", paths) {
+      DuckDbLive.insertRows(c, "INSERT INTO file_seq VALUES", "(?, ?)", paths) {
         (ps, o, p) =>
           ps.setString(o + 1, p)
           ps.setLong(o + 2, seq)
@@ -709,7 +700,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"),
         col("o_orderdate").cast("date").as("d"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s39_") { base =>
+    withTempTableDir("graft_s39_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -753,18 +744,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
           "conflict_rejected")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: scratch censuses only; conflict_rejected=false
-      // fails the oracle's TRUE, so a missing driver can never pass
-      val s1 = o.filter(col("d") < lit(Cutoff).cast("date"))
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      val s2 = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq(
-        (1L, 2L, s1.getLong(0), s1.getLong(1), false, false),
-        (2L, 5L, s2.getLong(0), s2.getLong(1), true, false))
-        .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
-          "conflict_rejected")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -796,7 +775,7 @@ object SnapshotLog {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val cents = expr("CAST(floor(value * 100) AS BIGINT)").as("cents")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s41_") { base =>
+    withTempTableDir("graft_s41_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -852,23 +831,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
           "exactly_once")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: batch censuses only; exactly_once=false fails
-      // the oracle's TRUE, so a missing driver can never pass
-      val ev = Tables.events(spark, dir)
-        .select(cents, graft.ops.TimeCodec.dayInt(col("ts")).as("day"))
-      val b0 = ev.filter(col("day") <= graft.streaming.Watermarks.splitDay)
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      val ba = ev.agg(count(lit(1)), sum(col("cents"))).head()
-      val br = ev.filter(col("day") < graft.streaming.Watermarks.replayBefore)
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      Seq(
-        (1L, 2L, b0.getLong(0), b0.getLong(1), false, false),
-        (2L, 4L, ba.getLong(0), ba.getLong(1), false, false),
-        (3L, 6L, ba.getLong(0) + br.getLong(0), ba.getLong(1) + br.getLong(1), true, false))
-        .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "is_current",
-          "exactly_once")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -907,7 +869,7 @@ object SnapshotLog {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
 
-    if (DuckDbLive.available) withTempTableDir("graft_s40_") { base =>
+    withTempTableDir("graft_s40_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       IncrementalRefresh.initStore(dbFile)
@@ -963,16 +925,6 @@ object SnapshotLog {
         .toDF("n_files_added", "rows_added", "n_buckets", "n_rows_view",
           "sum_cents_view", "view_ok", "n_redeliveries_rejected", "refresh_live")
         .orderBy("n_files_added")
-    } else {
-      // honest fallback: from-scratch numbers, refresh_live=false fails
-      // the oracle's TRUE
-      val nb = o.select(countDistinct(col("bucket"))).head().getLong(0)
-      val ra = o.filter(!(col("d") < lit(Cutoff).cast("date"))).count()
-      val agg = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq((3L, ra, nb, agg.getLong(0), agg.getLong(1), false, 0L, false))
-        .toDF("n_files_added", "rows_added", "n_buckets", "n_rows_view",
-          "sum_cents_view", "view_ok", "n_redeliveries_rejected", "refresh_live")
-        .orderBy("n_files_added")
     }
   }
 
@@ -1011,7 +963,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"),
         col("o_orderdate").cast("date").as("d"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s42_") { base =>
+    withTempTableDir("graft_s42_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -1062,15 +1014,6 @@ object SnapshotLog {
         agg.getLong(0),
         agg.getLong(1),
         gcSafe))
-        .toDF("n_snapshots_expired", "n_orphans_deleted",
-          "n_expired_files_deleted", "n_files_live", "n_rows", "sum_cents",
-          "gc_safe")
-        .orderBy("n_rows")
-    } else {
-      // honest fallback: scratch census only; gc_safe=false fails the
-      // oracle's TRUE, so a missing driver can never pass
-      val agg = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq((2L, 2L, 5L, 2L, agg.getLong(0), agg.getLong(1), false))
         .toDF("n_snapshots_expired", "n_orphans_deleted",
           "n_expired_files_deleted", "n_files_live", "n_rows", "sum_cents",
           "gc_safe")
@@ -1126,7 +1069,7 @@ object SnapshotLog {
       .map(i => (mx - (mx % 4) + 4L * (i + 1) + 2L, 1000000L + 7L * i))
       .toDF("k", "cents")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s43_") { base =>
+    withTempTableDir("graft_s43_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -1179,19 +1122,6 @@ object SnapshotLog {
           "n_deleted", "n_updated", "n_inserted", "n_rows", "sum_cents",
           "n_rows_pre", "sum_cents_pre", "merge_ok")
         .orderBy("n_rows")
-    } else {
-      // honest fallback: from-scratch merge arithmetic; merge_ok=false
-      // fails the oracle's TRUE
-      val b = o.agg(count(lit(1)), sum(col("cents"))).head()
-      val sd = deltaAgg.getLong(2)
-      val si = (0 until 10).map(i => 1000000L + 7L * i).sum
-      Seq((4L, 1L, 3L, nd, nu, 10L,
-        b.getLong(0) - nd + 10L, b.getLong(1) - sd + 1000L * nu + si,
-        b.getLong(0), b.getLong(1), false))
-        .toDF("n_files_base", "n_files_rewritten", "n_files_carried",
-          "n_deleted", "n_updated", "n_inserted", "n_rows", "sum_cents",
-          "n_rows_pre", "sum_cents_pre", "merge_ok")
-        .orderBy("n_rows")
     }
   }
 
@@ -1240,7 +1170,7 @@ object SnapshotLog {
       .map(i => (mx - (mx % 4) + 4L * (i + 1) + 2L, 1000000L + 7L * i))
       .toDF("k", "cents")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s45_") { base =>
+    withTempTableDir("graft_s45_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -1292,26 +1222,6 @@ object SnapshotLog {
         .toDF("change_type", "n_rows", "key_sum", "sum_cents_pre",
           "sum_cents_post", "n_files_scanned")
         .orderBy("change_type")
-    } else {
-      // honest fallback: predicate arithmetic; n_files_scanned=0 fails
-      // the oracle's 2
-      val agg = o.agg(
-        sum(when(delPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(delPred, col("k")).otherwise(lit(0L))),
-        sum(when(delPred, col("cents")).otherwise(lit(0L))),
-        sum(when(updPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(updPred, col("k")).otherwise(lit(0L))),
-        sum(when(updPred, col("cents")).otherwise(lit(0L)))).head()
-      val insK = (0 until 10).map(i => mx - (mx % 4) + 4L * (i + 1) + 2L).sum
-      val insC = (0 until 10).map(i => 1000000L + 7L * i).sum
-      Seq(
-        ("delete", agg.getLong(0), agg.getLong(1), agg.getLong(2), 0L, 0L),
-        ("insert", 10L, insK, 0L, insC, 0L),
-        ("update", agg.getLong(3), agg.getLong(4), agg.getLong(5),
-          agg.getLong(5) + 1000L * agg.getLong(3), 0L))
-        .toDF("change_type", "n_rows", "key_sum", "sum_cents_pre",
-          "sum_cents_post", "n_files_scanned")
-        .orderBy("change_type")
     }
   }
 
@@ -1357,7 +1267,7 @@ object SnapshotLog {
     val stagePred = col("k") % 3 === 0
     val corruptPred = col("k") % 150 === 3
 
-    if (DuckDbLive.available) withTempTableDir("graft_s46_") { base =>
+    withTempTableDir("graft_s46_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initRefs(dbFile)
@@ -1408,20 +1318,6 @@ object SnapshotLog {
           "n_rows_main_published", "sum_cents_main_published", "published",
           "stale_publish_rejected", "wap_ok")
         .orderBy("n_bad_staged")
-    } else {
-      // honest fallback: predicate arithmetic; wap_ok=false fails the
-      // oracle's TRUE
-      val agg = o.agg(
-        sum(when(corruptPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(!stagePred, lit(1L)).otherwise(lit(0L))),
-        sum(when(!stagePred, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      Seq((agg.getLong(0), agg.getLong(1), agg.getLong(2),
-        agg.getLong(3), agg.getLong(4), false, false, false))
-        .toDF("n_bad_staged", "n_rows_main_staged", "sum_cents_main_staged",
-          "n_rows_main_published", "sum_cents_main_published", "published",
-          "stale_publish_rejected", "wap_ok")
-        .orderBy("n_bad_staged")
     }
   }
 
@@ -1443,7 +1339,7 @@ object SnapshotLog {
       dbFile: String,
       stats: Seq[(String, Long, Long)]): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_spec VALUES (?, ?, ?)", stats) {
+      DuckDbLive.insertRows(c, "INSERT INTO file_spec VALUES", "(?, ?, ?)", stats) {
         (ps, o, r) =>
           ps.setString(o + 1, r._1)
           ps.setLong(o + 2, r._2)
@@ -1511,7 +1407,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"),
         col("o_orderdate").cast("date").as("d"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s48_") { base =>
+    withTempTableDir("graft_s48_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initSpecs(dbFile)
@@ -1592,25 +1488,6 @@ object SnapshotLog {
         manifest(dbFile, 2L).size.toLong, pruned.size.toLong,
         sel.getLong(0), sel.getLong(1),
         snap1.getLong(0), snap1.getLong(1), evolutionOk))
-        .toDF("n_files_total", "n_files_scanned", "n_rows_sel",
-          "sum_cents_sel", "n_rows_snap1", "sum_cents_snap1", "evolution_ok")
-        .orderBy("n_rows_sel")
-    } else {
-      // honest fallback: predicate arithmetic; evolution_ok=false fails
-      // the oracle's TRUE
-      val pre = col("d") < lit(Cutoff).cast("date")
-      val agg = o.agg(
-        countDistinct(when(!pre, col("k") % 8)),
-        sum(when(pre && col("k") % 4 === 1, lit(1L)).otherwise(lit(0L))),
-        sum(when(!pre && col("k") % 8 === 5, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 8 === 5, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 8 === 5, col("cents")).otherwise(lit(0L))),
-        sum(when(pre, lit(1L)).otherwise(lit(0L))),
-        sum(when(pre, col("cents")).otherwise(lit(0L)))).head()
-      val scanned = (if (agg.getLong(1) > 0) 1L else 0L) +
-        (if (agg.getLong(2) > 0) 1L else 0L)
-      Seq((4L + agg.getLong(0), scanned, agg.getLong(3), agg.getLong(4),
-        agg.getLong(5), agg.getLong(6), false))
         .toDF("n_files_total", "n_files_scanned", "n_rows_sel",
           "sum_cents_sel", "n_rows_snap1", "sum_cents_snap1", "evolution_ok")
         .orderBy("n_rows_sel")
@@ -1695,7 +1572,7 @@ object SnapshotLog {
       fields: Seq[(Long, String, String)]): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
       DuckDbLive.insertRows(
-        c, "INSERT INTO schema_fields VALUES (?, ?, ?, ?)", fields) {
+        c, "INSERT INTO schema_fields VALUES", "(?, ?, ?, ?)", fields) {
         (ps, o, r) =>
           ps.setLong(o + 1, schemaId)
           ps.setLong(o + 2, r._1)
@@ -1709,7 +1586,7 @@ object SnapshotLog {
       paths: Seq[String],
       schemaId: Long): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_schema VALUES (?, ?)", paths) {
+      DuckDbLive.insertRows(c, "INSERT INTO file_schema VALUES", "(?, ?)", paths) {
         (ps, o, p) =>
           ps.setString(o + 1, p)
           ps.setLong(o + 2, schemaId)
@@ -1811,7 +1688,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s50_") { base =>
+    withTempTableDir("graft_s50_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initSchemas(dbFile)
@@ -1878,28 +1755,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "schema_id", "n_files", "n_rows", "sum_cents",
           "n_disc", "sum_disc", "evolution_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: predicate arithmetic; evolution_ok=false fails
-      // the oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 3 === 0, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 0, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, col("k") % 5 + 1).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 2, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 2, col("k") % 7 + 3).otherwise(lit(0L)))).head()
-      val (n0, s0) = (agg.getLong(0), agg.getLong(1))
-      val (n1, s1, d1) = (agg.getLong(2), agg.getLong(3), agg.getLong(4))
-      val (n2, s2, d2) = (agg.getLong(5), agg.getLong(6), agg.getLong(7))
-      Seq(
-        (1L, 1L, 2L, n0, s0, 0L, 0L, false),
-        (2L, 2L, 4L, n0 + n1, s0 + s1, n1, d1, false),
-        (3L, 3L, 6L, n0 + n1 + n2, s0 + s1 + s2, n2, d2, false))
-        .toDF("snapshot_id", "schema_id", "n_files", "n_rows", "sum_cents",
-          "n_disc", "sum_disc", "evolution_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -1936,17 +1791,12 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s51_") { base =>
+    withTempTableDir("graft_s51_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initTimestamps(dbFile)
 
       def slice(r: Long) = o.filter(col("k") % 3 === r)
-      def census(snap: Long): (Long, Long) = {
-        val a = spark.read.parquet(manifest(dbFile, snap).map(_._1): _*)
-          .agg(count(lit(1)), sum(col("cents"))).head()
-        (a.getLong(0), a.getLong(1))
-      }
 
       // the three slice stagings are independent writes — overlapped
       // (guide §2.6, r21); the commits stay strictly ordered below
@@ -2008,24 +1858,6 @@ object SnapshotLog {
         ("redo_snapshot4", 4L, redoCensus._1, redoCensus._2, ok))
         .toDF("read", "snapshot_id", "n_rows", "sum_cents", "rollback_ok")
         .orderBy("read")
-    } else {
-      // honest fallback: slice arithmetic; rollback_ok=false fails the
-      // oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 3 === 0, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 0, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 3 === 1, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val (n0, s0) = (agg.getLong(0), agg.getLong(1))
-      val (n01, s01) = (n0 + agg.getLong(2), s0 + agg.getLong(3))
-      Seq(
-        ("asof_t2500", 2L, n01, s01, false),
-        ("current_after_rollback", 1L, n0, s0, false),
-        ("history_snapshot3", 3L, agg.getLong(4), agg.getLong(5), false),
-        ("redo_snapshot4", 4L, n01, s01, false))
-        .toDF("read", "snapshot_id", "n_rows", "sum_cents", "rollback_ok")
-        .orderBy("read")
     }
   }
 
@@ -2062,7 +1894,7 @@ object SnapshotLog {
     val s = graft.streaming.StreamSessions.tuned(spark)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s47_") { base =>
+    withTempTableDir("graft_s47_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initMor(dbFile)
@@ -2145,29 +1977,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_users",
           "sum_cents", "upsert_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: batch recompute of the per-snapshot upsert
-      // states; upsert_ok=false fails the oracle's TRUE
-      val ev = Tables.events(spark, dir)
-        .select(col("event_id"), col("user_id"),
-          expr("CAST(floor(value * 100) AS BIGINT)").as("cents"),
-          graft.ops.TimeCodec.dayInt(col("ts")).as("day"))
-      val sd = graft.streaming.Watermarks.splitDay
-      val rb = graft.streaming.Watermarks.replayBefore
-      val del = ev.filter(col("day") <= sd).withColumn("e", lit(0L))
-        .unionByName(ev.filter(col("day") > sd).withColumn("e", lit(1L)))
-        .unionByName(ev.filter(col("day") < rb).withColumn("e", lit(2L)))
-      val rows = (1L to 3L).map { snap =>
-        val w = del.filter(col("e") < snap)
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("e"), col("event_id"), col("cents"))).as("w"))
-          .agg(count(lit(1)), sum(col("w.cents"))).head()
-        (snap, snap, snap, w.getLong(0), w.getLong(1), false)
-      }
-      rows
-        .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_users",
-          "sum_cents", "upsert_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -2212,7 +2021,7 @@ object SnapshotLog {
     val delPred = col("k") % 20 === 6
     val updPred = col("k") % 20 === 2
 
-    if (DuckDbLive.available) withTempTableDir("graft_s44_") { base =>
+    withTempTableDir("graft_s44_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -2326,24 +2135,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_rows",
           "sum_cents", "mor_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: predicate arithmetic only; mor_ok=false fails
-      // the oracle's TRUE
-      val agg = o.agg(
-        count(lit(1)), sum(col("cents")),
-        sum(when(delPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(delPred, col("cents")).otherwise(lit(0L))),
-        sum(when(updPred, lit(1L)).otherwise(lit(0L)))).head()
-      val (n, s) = (agg.getLong(0), agg.getLong(1))
-      val (nd, sd, nu) = (agg.getLong(2), agg.getLong(3), agg.getLong(4))
-      Seq(
-        (1L, 4L, 0L, n, s, false),
-        (2L, 4L, 1L, n - nd, s - sd, false),
-        (3L, 5L, 2L, n - nd, s - sd + 1000L * nu, false),
-        (4L, 4L, 0L, n - nd, s - sd + 1000L * nu, false))
-        .toDF("snapshot_id", "n_data_files", "n_delete_files", "n_rows",
-          "sum_cents", "mor_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -2398,7 +2189,7 @@ object SnapshotLog {
     // (cents - 1000000) div 7 ≡ 0 (mod 3) — i ∈ {0, 3, 6, 9}
     val insDelPred = expr("((cents - 1000000) div 7) % 3 = 0")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s49_") { base =>
+    withTempTableDir("graft_s49_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -2514,27 +2305,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_data_files", "n_eq_delete_files",
           "n_pos_delete_files", "n_rows", "sum_cents", "posmor_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: predicate arithmetic only; posmor_ok=false
-      // fails the oracle's TRUE
-      val agg = o.agg(
-        count(lit(1)), sum(col("cents")),
-        sum(when(delPred, lit(1L)).otherwise(lit(0L))),
-        sum(when(delPred, col("cents")).otherwise(lit(0L))),
-        sum(when(updPred, lit(1L)).otherwise(lit(0L)))).head()
-      val (n, s) = (agg.getLong(0), agg.getLong(1))
-      val (nd, sd, nu) = (agg.getLong(2), agg.getLong(3), agg.getLong(4))
-      val keptIns = (0 until 10).filter(_ % 3 != 0)
-      val (ni, si) = (keptIns.size.toLong, keptIns.map(i => 1000000L + 7L * i).sum)
-      Seq(
-        (1L, 4L, 0L, 0L, n, s, false),
-        (2L, 4L, 0L, 1L, n - nd, s - sd, false),
-        (3L, 5L, 1L, 1L, n - nd, s - sd + 1000L * nu, false),
-        (4L, 6L, 1L, 2L, n - nd + ni, s - sd + 1000L * nu + si, false),
-        (5L, 5L, 0L, 0L, n - nd + ni, s - sd + 1000L * nu + si, false))
-        .toDF("snapshot_id", "n_data_files", "n_eq_delete_files",
-          "n_pos_delete_files", "n_rows", "sum_cents", "posmor_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -2565,7 +2335,7 @@ object SnapshotLog {
       col: String,
       stats: Seq[(String, Long, Long)]): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO col_stats VALUES (?, ?, ?, ?)", stats) {
+      DuckDbLive.insertRows(c, "INSERT INTO col_stats VALUES", "(?, ?, ?, ?)", stats) {
         (ps, o, r) =>
           ps.setString(o + 1, r._1)
           ps.setString(o + 2, col)
@@ -2749,7 +2519,7 @@ object SnapshotLog {
     val bw = (mxv - mn) / 4L + 1L
     val (lo, hi) = (mn + bw / 2L, mn + bw - 1L)
 
-    if (DuckDbLive.available) withTempTableDir("graft_s52_") { base =>
+    withTempTableDir("graft_s52_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColStats(dbFile)
@@ -2803,25 +2573,6 @@ object SnapshotLog {
         f1.size.toLong, scan1.size.toLong, f2.size.toLong, scan2.size.toLong,
         direct.getLong(0), direct.getLong(1),
         total.getLong(0), total.getLong(1), skipOk))
-        .toDF("n_files_unclustered", "n_scanned_unclustered",
-          "n_files_clustered", "n_scanned_clustered",
-          "n_sel", "sum_sel", "n_rows", "sum_cents", "skip_ok")
-        .orderBy("n_sel")
-    } else {
-      // honest fallback: group arithmetic only; skip_ok=false fails the
-      // oracle's TRUE
-      val ov1 = o.groupBy(pmod(col("k"), lit(4L)))
-        .agg(min(col("cents")).as("fmn"), max(col("cents")).as("fmx"))
-        .filter(col("fmx") >= lo && col("fmn") <= hi).count()
-      val g2 = o.groupBy(expr(s"(cents - $mn) div $bw"))
-        .agg(min(col("cents")).as("fmn"), max(col("cents")).as("fmx"))
-      val nf2 = g2.count()
-      val ov2 = g2.filter(col("fmx") >= lo && col("fmn") <= hi).count()
-      val direct = o.filter(col("cents").between(lo, hi))
-        .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head()
-      val total = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq((4L, ov1, nf2, ov2, direct.getLong(0), direct.getLong(1),
-        total.getLong(0), total.getLong(1), false))
         .toDF("n_files_unclustered", "n_scanned_unclustered",
           "n_files_clustered", "n_scanned_clustered",
           "n_sel", "sum_sel", "n_rows", "sum_cents", "skip_ok")
@@ -2909,7 +2660,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s54_") { base =>
+    withTempTableDir("graft_s54_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initRefs(dbFile)
@@ -2956,19 +2707,6 @@ object SnapshotLog {
           "sum_cents_current", "n_expired_first", "n_live_after_first",
           "n_expired_second", "n_live_after_second", "tags_ok")
         .orderBy("n_rows_tagged")
-    } else {
-      // honest fallback: slice arithmetic only; tags_ok=false fails the
-      // oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 4 < 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 4 < 2, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      Seq((agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3),
-        1L, 3L, 1L, 1L, false))
-        .toDF("n_rows_tagged", "sum_cents_tagged", "n_rows_current",
-          "sum_cents_current", "n_expired_first", "n_live_after_first",
-          "n_expired_second", "n_live_after_second", "tags_ok")
-        .orderBy("n_rows_tagged")
     }
   }
 
@@ -3004,7 +2742,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s55_") { base =>
+    withTempTableDir("graft_s55_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColStats(dbFile)
@@ -3059,19 +2797,6 @@ object SnapshotLog {
           "n_violating_files", "n_rows_final", "sum_cents_final",
           "constraint_ok")
         .orderBy("n_rows_s1")
-    } else {
-      // honest fallback: slice arithmetic; constraint_ok=false fails
-      // the oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 2 === 0, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 2 === 0, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      Seq((agg.getLong(0), agg.getLong(1), 2L, 2L,
-        agg.getLong(2), agg.getLong(3), false))
-        .toDF("n_rows_s1", "sum_cents_s1", "n_staged_files",
-          "n_violating_files", "n_rows_final", "sum_cents_final",
-          "constraint_ok")
-        .orderBy("n_rows_s1")
     }
   }
 
@@ -3112,7 +2837,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s53_") { base =>
+    withTempTableDir("graft_s53_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -3194,25 +2919,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "parent_id", "depth", "n_files", "n_added",
           "n_rows_meta", "n_rows_read", "sum_cents", "meta_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: slice arithmetic only; meta_ok=false fails the
-      // oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 4 < 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 4 < 2, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 4 === 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 4 === 2, col("cents")).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val (n1, s1) = (agg.getLong(0), agg.getLong(1))
-      val (n2, s2) = (n1 + agg.getLong(2), s1 + agg.getLong(3))
-      val (n3, s3) = (agg.getLong(4), agg.getLong(5))
-      Seq(
-        (1L, 0L, 1L, 2L, 2L, n1, n1, s1, false),
-        (2L, 1L, 2L, 3L, 1L, n2, n2, s2, false),
-        (3L, 2L, 3L, 4L, 1L, n3, n3, s3, false))
-        .toDF("snapshot_id", "parent_id", "depth", "n_files", "n_added",
-          "n_rows_meta", "n_rows_read", "sum_cents", "meta_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -3256,8 +2962,7 @@ object SnapshotLog {
       .select(
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
-    // lazy so the live path can overlap this probe with the base write
-    // (guide §2.6) — the fallback path forces it on first use
+    // lazy so the probe can overlap the base write (guide §2.6)
     lazy val mx = o.agg(max(col("k"))).head().getLong(0)
     lazy val mxb = mx - mx % 4
     // snapshot-2 / snapshot-3 insert batches (keys past mx, in the
@@ -3265,7 +2970,7 @@ object SnapshotLog {
     lazy val ins1 = (0 until 10).map(i => (mxb + 4L * (i + 1) + 2L, 1000000L + 7L * i))
     lazy val ins2 = (0 until 5).map(i => (mxb + 4L * (i + 1) + 1L, 2000000L + 11L * i))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s56_") { base =>
+    withTempTableDir("graft_s56_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -3363,30 +3068,6 @@ object SnapshotLog {
         applyStep(1L, 1L, 2L, s"$base/rep1", s"$base/rep2"),
         applyStep(2L, 2L, 3L, s"$base/rep2", s"$base/rep3"))
       rows
-        .toDF("step", "n_delete", "n_update", "n_insert", "n_files_diff",
-          "replica_rows", "replica_cents", "src_rows", "src_cents", "apply_ok")
-        .orderBy("step")
-    } else {
-      // honest fallback: predicate arithmetic; n_files_diff=0 fails
-      // the oracle's 2
-      val agg = o.agg(
-        sum(when(col("k") % 20 === 6, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 6, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 13, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 13, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 17, lit(1L)).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val (nd1, sd1, nu1) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-      val (nd2, sd2, nu2) = (agg.getLong(3), agg.getLong(4), agg.getLong(5))
-      val (n, s) = (agg.getLong(6), agg.getLong(7))
-      val n2 = n - nd1 + ins1.size
-      val s2 = s - sd1 + 1000L * nu1 + ins1.map(_._2).sum
-      val n3 = n2 - nd2 + ins2.size
-      val s3 = s2 - sd2 + 500L * nu2 + ins2.map(_._2).sum
-      Seq(
-        (1L, nd1, nu1, ins1.size.toLong, 0L, n2, s2, n2, s2, true),
-        (2L, nd2, nu2, ins2.size.toLong, 0L, n3, s3, n3, s3, true))
         .toDF("step", "n_delete", "n_update", "n_insert", "n_files_diff",
           "replica_rows", "replica_cents", "src_rows", "src_cents", "apply_ok")
         .orderBy("step")
@@ -3521,7 +3202,7 @@ object SnapshotLog {
       ("box_xy", 4L, 7L, 8L, 11L),
       ("stripe_y", 0L, 15L, 0L, 3L))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s57_") { base =>
+    withTempTableDir("graft_s57_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColStats2(dbFile)
@@ -3567,30 +3248,6 @@ object SnapshotLog {
         (layout, qn, manifest(dbFile, snap).size.toLong, scanned.size.toLong,
           direct.getLong(0), direct.getLong(1), ok)
       })
-      rows
-        .toDF("layout", "query", "n_files", "n_scanned", "n_sel", "sum_sel",
-          "scan_ok")
-        .orderBy("layout", "query")
-    } else {
-      // honest fallback: group arithmetic only; scan_ok=false fails the
-      // oracle's TRUE
-      val rows = for {
-        (layout, gExpr) <- Seq(("linear", "x"), ("zorder", zKey))
-        (qn, xlo, xhi, ylo, yhi) <- queries
-      } yield {
-        val g = d.groupBy(expr(gExpr))
-          .agg(
-            min(col("x")).as("mnx"), max(col("x")).as("mxx"),
-            min(col("y")).as("mny"), max(col("y")).as("mxy"))
-        val nf = g.count()
-        val ov = g.filter(
-          col("mxx") >= xlo && col("mnx") <= xhi &&
-            col("mxy") >= ylo && col("mny") <= yhi).count()
-        val direct = d
-          .filter(col("x").between(xlo, xhi) && col("y").between(ylo, yhi))
-          .agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).head()
-        (layout, qn, nf, ov, direct.getLong(0), direct.getLong(1), false)
-      }
       rows
         .toDF("layout", "query", "n_files", "n_scanned", "n_sel", "sum_sel",
           "scan_ok")
@@ -3665,7 +3322,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s58_") { base =>
+    withTempTableDir("graft_s58_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -3732,14 +3389,6 @@ object SnapshotLog {
         .toDF("n_files_s1", "n_small_planned", "n_groups", "n_files_s2",
           "n_files_tt1", "n_rows", "sum_cents", "compact_ok")
         .orderBy("n_files_s1")
-    } else {
-      // honest fallback: construction constants; compact_ok=false fails
-      // the oracle's TRUE
-      val direct = o.agg(count(lit(1)), sum(col("cents"))).head()
-      Seq((9L, 8L, 2L, 3L, 9L, direct.getLong(0), direct.getLong(1), false))
-        .toDF("n_files_s1", "n_small_planned", "n_groups", "n_files_s2",
-          "n_files_tt1", "n_rows", "sum_cents", "compact_ok")
-        .orderBy("n_files_s1")
     }
   }
 
@@ -3782,7 +3431,7 @@ object SnapshotLog {
     val insA = (0 until 10).map(i => (mx + 1L + i, 3000000L + 13L * i))
     val insB = (0 until 10).map(i => (mx + 11L + i, 4000000L + 17L * i))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s60_") { base =>
+    withTempTableDir("graft_s60_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
 
@@ -3827,16 +3476,6 @@ object SnapshotLog {
           "rebase_committed", "n_rows_s2", "n_rows_s3", "sum_cents_s3",
           "retry_ok")
         .orderBy("n_rows_base")
-    } else {
-      // honest fallback: retry_ok=false fails the oracle's TRUE
-      val r = o.agg(count(lit(1)), sum(col("cents"))).head()
-      val (nb, sb) = (r.getLong(0), r.getLong(1))
-      Seq((nb, 10L, 10L, true, true, nb + 10L, nb + 20L,
-        sb + insA.map(_._2).sum + insB.map(_._2).sum, false))
-        .toDF("n_rows_base", "n_a", "n_b", "first_b_rejected",
-          "rebase_committed", "n_rows_s2", "n_rows_s3", "sum_cents_s3",
-          "retry_ok")
-        .orderBy("n_rows_base")
     }
   }
 
@@ -3870,7 +3509,7 @@ object SnapshotLog {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val cents = expr("CAST(floor(value * 100) AS BIGINT)").as("cents")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s61_") { base =>
+    withTempTableDir("graft_s61_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -3933,24 +3572,6 @@ object SnapshotLog {
           loopOk)
       }
       rows
-        .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "compacted",
-          "is_current", "loop_ok")
-        .orderBy("snapshot_id")
-    } else {
-      // honest fallback: batch censuses; loop_ok=false fails the oracle
-      val ev = Tables.events(spark, dir)
-        .select(cents, graft.ops.TimeCodec.dayInt(col("ts")).as("day"))
-      val b0 = ev.filter(col("day") <= graft.streaming.Watermarks.splitDay)
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      val ba = ev.agg(count(lit(1)), sum(col("cents"))).head()
-      val br = ev.filter(col("day") < graft.streaming.Watermarks.replayBefore)
-        .agg(count(lit(1)), sum(col("cents"))).head()
-      Seq(
-        (1L, 2L, b0.getLong(0), b0.getLong(1), false, false, false),
-        (2L, 4L, ba.getLong(0), ba.getLong(1), false, false, false),
-        (3L, 1L, ba.getLong(0), ba.getLong(1), true, false, false),
-        (4L, 3L, ba.getLong(0) + br.getLong(0), ba.getLong(1) + br.getLong(1),
-          false, true, false))
         .toDF("snapshot_id", "n_files", "n_rows", "sum_cents", "compacted",
           "is_current", "loop_ok")
         .orderBy("snapshot_id")
@@ -4026,14 +3647,13 @@ object SnapshotLog {
       .select(
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
-    // lazy so the live path can overlap this probe with the base write
-    // (guide §2.6) — the fallback path forces it on first use
+    // lazy so the probe can overlap the base write (guide §2.6)
     lazy val mx = o.agg(max(col("k"))).head().getLong(0)
     lazy val mxb = mx - mx % 4
     lazy val ins1 = (0 until 10).map(i => (mxb + 4L * (i + 1) + 2L, 1000000L + 7L * i))
     lazy val ins2 = (0 until 5).map(i => (mxb + 4L * (i + 1) + 1L, 2000000L + 11L * i))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s62_") { base =>
+    withTempTableDir("graft_s62_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -4196,32 +3816,6 @@ object SnapshotLog {
           "applied", "replica_rows", "replica_cents", "src_rows",
           "src_cents", "apply_ok", "consume_ok")
         .orderBy("step")
-    } else {
-      // honest fallback: predicate arithmetic; applied/consume_ok=false
-      // fails the oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 20 === 6, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 6, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 2, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 13, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 13, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 17, lit(1L)).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val (nd1, sd1, nu1) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-      val (nd2, sd2, nu2) = (agg.getLong(3), agg.getLong(4), agg.getLong(5))
-      val (n, sm) = (agg.getLong(6), agg.getLong(7))
-      val n2 = n - nd1 + ins1.size
-      val s2 = sm - sd1 + 1000L * nu1 + ins1.map(_._2).sum
-      val n3 = n2 - nd2 + ins2.size
-      val s3 = s2 - sd2 + 500L * nu2 + ins2.map(_._2).sum
-      Seq(
-        (1L, 1L, nd1, nu1, 10L, false, n2, s2, n2, s2, true, false),
-        (2L, 2L, nd2, nu2, 5L, false, n3, s3, n3, s3, true, false),
-        (3L, 2L, nd2, nu2, 5L, false, n3, s3, n3, s3, true, false))
-        .toDF("step", "batch_id", "n_delete", "n_update", "n_insert",
-          "applied", "replica_rows", "replica_cents", "src_rows",
-          "src_cents", "apply_ok", "consume_ok")
-        .orderBy("step")
     }
   }
 
@@ -4270,7 +3864,7 @@ object SnapshotLog {
     val insDev = (0 until 6).map(i => (mxb + 4L * (i + 1) + 3L, 3000000L + 13L * i))
     val insMain = (0 until 4).map(i => (mxb + 4L * (i + 1), 4000000L + 17L * i))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s63_") { base =>
+    withTempTableDir("graft_s63_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -4351,26 +3945,6 @@ object SnapshotLog {
           "n_main_removed", "merged", "n_rows_merged", "sum_cents_merged",
           "conflict_rejected", "merge_ok")
         .orderBy("n_branch_added")
-    } else {
-      // honest fallback: predicate arithmetic; merged/merge_ok=false
-      // fails the oracle's TRUE
-      val agg = o.agg(
-        sum(when(col("k") % 20 === 7, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 7, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 11, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 8, lit(1L)).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 8, col("cents")).otherwise(lit(0L))),
-        sum(when(col("k") % 20 === 0, lit(1L)).otherwise(lit(0L))),
-        count(lit(1)), sum(col("cents"))).head()
-      val n = agg.getLong(6) - agg.getLong(0) - agg.getLong(3) + 10L
-      val sm = agg.getLong(7) - agg.getLong(1) - agg.getLong(4) +
-        300L * agg.getLong(2) + 200L * agg.getLong(5) +
-        insDev.map(_._2).sum + insMain.map(_._2).sum
-      Seq((1L, 1L, 1L, 1L, false, n, sm, false, false))
-        .toDF("n_branch_added", "n_branch_removed", "n_main_added",
-          "n_main_removed", "merged", "n_rows_merged", "sum_cents_merged",
-          "conflict_rejected", "merge_ok")
-        .orderBy("n_branch_added")
     }
   }
 
@@ -4391,7 +3965,7 @@ object SnapshotLog {
 
   private[graft] def recordNdv(dbFile: String, rows: Seq[(String, Long, Long)]): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO file_ndv VALUES (?, ?, ?)", rows) {
+      DuckDbLive.insertRows(c, "INSERT INTO file_ndv VALUES", "(?, ?, ?)", rows) {
         (ps, o, r) =>
           ps.setString(o + 1, r._1)
           ps.setLong(o + 2, r._2)
@@ -4457,7 +4031,7 @@ object SnapshotLog {
       dbFile: String,
       rows: Seq[(String, String, Long, Long)]): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO col_ndv VALUES (?, ?, ?, ?)", rows) {
+      DuckDbLive.insertRows(c, "INSERT INTO col_ndv VALUES", "(?, ?, ?, ?)", rows) {
         (ps, o, r) =>
           ps.setString(o + 1, r._1)
           ps.setString(o + 2, r._2)
@@ -4546,7 +4120,7 @@ object SnapshotLog {
       dbFile: String,
       rows: Seq[(String, String, Long, Long)]): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO col_topk VALUES (?, ?, ?, ?)", rows) {
+      DuckDbLive.insertRows(c, "INSERT INTO col_topk VALUES", "(?, ?, ?, ?)", rows) {
         (ps, o, r) =>
           ps.setString(o + 1, r._1)
           ps.setString(o + 2, r._2)
@@ -4590,8 +4164,7 @@ object SnapshotLog {
     * (lower-bound) observed sum beats both bounds. On a uniform column
     * the bit goes FALSE — exactly the q222-measured underestimate
     * (merged 11 vs exact 24) a planner must not silently trust.
-    * Pure arithmetic over ≤ k·n_files metadata rows; shared by the
-    * DuckDB reader and q218's no-DuckDB fallback.
+    * Pure arithmetic over ≤ k·n_files metadata rows.
     */
   private[graft] def top1Reliability(
       rows: Seq[(String, Long, Long)],
@@ -4668,7 +4241,7 @@ object SnapshotLog {
       paths: Seq[String],
       colName: String): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO stat_stale VALUES (?, ?)", paths) {
+      DuckDbLive.insertRows(c, "INSERT INTO stat_stale VALUES", "(?, ?)", paths) {
         (ps, o, p) =>
           ps.setString(o + 1, p)
           ps.setString(o + 2, colName)
@@ -4773,7 +4346,7 @@ object SnapshotLog {
       dbFile: String,
       rows: Seq[(String, String, Long, Long, Long)]): Unit =
     DuckDbLive.withConnection(dbFile) { c =>
-      DuckDbLive.insertRows(c, "INSERT INTO col_cms VALUES (?, ?, ?, ?, ?)", rows) {
+      DuckDbLive.insertRows(c, "INSERT INTO col_cms VALUES", "(?, ?, ?, ?, ?)", rows) {
         (ps, o, r) =>
           ps.setString(o + 1, r._1)
           ps.setString(o + 2, r._2)
@@ -4878,7 +4451,7 @@ object SnapshotLog {
     val dim = Tables.part(spark, dir).select(col("p_partkey").cast("long").as("pk"))
     val saltCol = pmod(Hashing.h60(col("rid").cast("string")), lit(8)).cast("int")
 
-    if (DuckDbLive.available) withTempTableDir("graft_q218_") { tmp =>
+    withTempTableDir("graft_q218_") { tmp =>
       val (files, topkRows, regRows) = q218Staged.computeIfAbsent(
         dir,
         _ => {
@@ -5008,43 +4581,6 @@ object SnapshotLog {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
         spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
-    } else {
-      // honest fallback: identical numbers from direct per-file
-      // groupings, but census_match/plan_ok=false fail the oracle's TRUE
-      def edgeRow(cn: String) = {
-        val nRows = bigRel.count()
-        val ndv = Hll.estimateInt(Hll.registerCensus(bigRel, col(cn).cast("string")))
-        // raw per-file top-8 rows (≤ 4·8, bounded) — the same frame the
-        // stat table would hold, decided by the shared top1Reliability
-        val tkRows = bigRel
-          .select(col("g"), col(cn).as("k"))
-          .groupBy("g", "k").agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("g").orderBy(col("c").desc, col("k"))))
-          .filter(col("rn") <= 8)
-          .select("g", "k", "c")
-          .collect() // ≤ 4·8 stat rows — metadata
-          .map(r => (r.getLong(0).toString, r.getLong(1), r.getLong(2)))
-          .toSeq
-        val (t1k, t1c, t1Rel) = top1Reliability(tkRows)
-        val skewX100 = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
-        val salted = skewX100 >= 800L
-        val r = bigRel.join(dim, col(cn) === col("pk"))
-          .agg(count(lit(1)), sum(col("cents"))).head()
-        val ex = bigRel.groupBy(col(cn).as("k")).agg(count(lit(1)).as("c"))
-          .orderBy(col("c").desc, col("k")).head()
-        val maxSalt = bigRel.groupBy(col(cn), saltCol.as("s"))
-          .agg(count(lit(1)).as("c")).agg(max("c")).head().getLong(0)
-        (cn, nRows, ndv, t1k, t1c, t1Rel, skewX100, salted, r.getLong(0),
-          r.getLong(1), false, if (salted) 1L else 0L, ex.getLong(1), maxSalt,
-          ex.getLong(0), t1k == ex.getLong(0) && t1c == ex.getLong(1), false)
-      }
-      Seq(edgeRow("pk_skew"), edgeRow("pk_unif"))
-        .toDF("edge", "n_rows", "ndv_est", "top1_key", "top1_cnt",
-          "top1_reliable", "skew_x100", "salted", "n_join", "sum_cents",
-          "census_match", "gen_nodes", "max_group", "max_salt_group",
-          "top1_key_exact", "top1_is_exact", "plan_ok")
-        .orderBy("edge")
     }
   }
 
@@ -5102,7 +4638,7 @@ object SnapshotLog {
     def cellJ(i: Int, k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       pmod(Hashing.h60(concat(lit(s"$i:"), k.cast("string"))), lit(CmsWidth))
 
-    if (DuckDbLive.available) withTempTableDir("graft_q220_") { tmp =>
+    withTempTableDir("graft_q220_") { tmp =>
       val (files, cmsRows) = q220Staged.computeIfAbsent(
         dir,
         _ => {
@@ -5163,39 +4699,6 @@ object SnapshotLog {
         (name, key, tru, est,
           (BigInt(est - tru) * 10000 / BigInt(math.max(tru, 1L))).toLong,
           est >= tru, nRows, nStatRows, skewCms, skewCms >= 800L, true)
-      }
-        .toDF("probe", "key", "true_cnt", "cms_est", "over_bp", "ge_ok",
-          "n_rows", "n_stat_rows", "skew_cms_x100", "salted_cms", "live_log")
-        .orderBy("probe")
-    } else {
-      // honest fallback: the same sketch from a direct grouping;
-      // live_log=false fails the oracle's TRUE
-      val cells = bigRel
-        .groupBy(col("k")).agg(count(lit(1)).as("c"))
-        .select(col("c"), explode(array((0 until CmsDepth).map(i =>
-          struct(lit(i.toLong).as("i"), cellJ(i, col("k")).as("j"))): _*)).as("ij"))
-        .groupBy(col("ij.i").as("i"), col("ij.j").as("j"))
-        .agg(sum(col("c")).as("cnt"))
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-      val nRows = bigRel.count()
-      def estimate(key: Long): Long =
-        (0 until CmsDepth).map { i =>
-          cells.getOrElse(
-            (i.toLong, Hashing.h60Local(s"$i:$key") % CmsWidth), 0L)
-        }.min
-      val exact: Map[Long, Long] = bigRel
-        .filter(col("k").isin(probes.map(_._2): _*))
-        .groupBy("k").agg(count(lit(1)).as("c"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val ndv = graft.ops.Hll.estimateInt(
-        graft.ops.Hll.registerCensus(bigRel, col("k").cast("string")))
-      val skewCms = (BigInt(estimate(1L)) * 100 * BigInt(ndv) / BigInt(nRows)).toLong
-      probes.map { case (name, key) =>
-        val est = estimate(key)
-        val tru = exact.getOrElse(key, 0L)
-        (name, key, tru, est,
-          (BigInt(est - tru) * 10000 / BigInt(math.max(tru, 1L))).toLong,
-          est >= tru, nRows, cells.size.toLong, skewCms, skewCms >= 800L, false)
       }
         .toDF("probe", "key", "true_cnt", "cms_est", "over_bp", "ge_ok",
           "n_rows", "n_stat_rows", "skew_cms_x100", "salted_cms", "live_log")
@@ -5266,7 +4769,7 @@ object SnapshotLog {
         when(col("l_returnflag") === "R", lit(1L))
           .otherwise(col("l_orderkey").cast("long")).as("lk_skew"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_q222_") { tmp =>
+    withTempTableDir("graft_q222_") { tmp =>
       val (fO, fC, fL, regRows, topkRows, cmsRows) = q222Staged.computeIfAbsent(
         dir,
         _ => {
@@ -5467,76 +4970,6 @@ object SnapshotLog {
             "generates", "plan_ok", "live_log")
           .orderBy("edge")
       }
-    } else {
-      // honest fallback: direct censuses stand in for the stat tables
-      // (q221's shape); live_log=false fails the oracle's TRUE
-      import org.apache.spark.sql.expressions.Window
-      def edgeRow(edge: String, probeKey: String, build: DataFrame,
-          buildKey: String) = {
-        val probe = ordersRel
-        val (nP, nB) = (probe.count(), build.count())
-        val (budget, buildBytes) = (nP * 8L / 4L, nB * 8L)
-        val t1 = probe
-          .select((col("k_ord") % 4).as("g"), col(probeKey).as("k"))
-          .groupBy("g", "k").agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("g").orderBy(col("c").desc, col("k"))))
-          .filter(col("rn") <= 8)
-          .groupBy("k").agg(sum("c").as("c"))
-          .orderBy(col("c").desc, col("k")).head()
-        val (t1k, t1c) = (t1.getLong(0), t1.getLong(1))
-        val ndv = Hll.estimateInt(
-          Hll.registerCensus(probe, col(probeKey).cast("string")))
-        val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nP)).toLong
-        val bNdv = Hll.estimateInt(
-          Hll.registerCensus(build, col(buildKey).cast("string")))
-        val bPerKey = build.groupBy(col(buildKey).as("hk"))
-          .agg(count(lit(1)).as("c"))
-        val bt1c = bPerKey.agg(max("c")).head().getLong(0)
-        val bSkew = (BigInt(bt1c) * 100 * BigInt(bNdv) / BigInt(nB)).toLong
-        val hot = bPerKey
-          .filter(col("c") * 100 * bNdv / nB >= 800)
-          .select("hk").collect().map(_.getLong(0)).toSeq.sorted
-        val hotEst = if (hot.isEmpty) 0L
-          else probe.filter(col(probeKey).isin(hot: _*)).count()
-        val strategy =
-          if (buildBytes <= budget) "broadcast"
-          else if (skew >= 800L) "salted"
-          else if (hot.nonEmpty && hotEst * 8L <= nP * 8L / 2L) "split"
-          else "shuffle"
-        val nNdvRows = probe
-          .select((col("k_ord") % 4).as("g"),
-            Hashing.h60(col(probeKey).cast("string")).as("h"))
-          .select(col("g"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-        val j = strategy match {
-          case "salted" =>
-            Salting.saltedJoinWith(probe, build, col(probeKey), col(buildKey),
-              pmod(Hashing.h60(col("rid").cast("string")), lit(8)).cast("int"), 8)
-          case _ => probe.join(build, col(probeKey) === col(buildKey))
-        }
-        val r = j.agg(count(lit(1)), sum(col(probeKey))).head()
-        val expected = strategy match {
-          case "broadcast" => (1L, 0L, 0L)
-          case "shuffle" => (0L, 2L, 0L)
-          case "salted" => (0L, 2L, 1L)
-          case "split" => (1L, 2L, 0L)
-        }
-        (edge, strategy, nP, nB, budget, buildBytes, ndv, t1k, t1c, skew,
-          bSkew, hotEst, nNdvRows, r.getLong(0), r.getLong(1), expected._1,
-          expected._2, expected._3, false, false)
-      }
-      Seq(
-        edgeRow("e1_dim", "k_cust", custRel, "ck"),
-        edgeRow("e2_flat", "k_ord", lineRel, "lk"),
-        edgeRow("e3_skew", "k_skew", lineRel, "lk"),
-        edgeRow("e4_build_skew", "k_ord", lineRel, "lk_skew"))
-        .toDF("edge", "strategy", "n_probe", "n_build", "budget_bytes",
-          "build_bytes", "ndv_probe", "top1_key", "top1_cnt", "skew_x100",
-          "build_skew_x100", "hot_probe_est",
-          "n_ndv_rows_read", "n_join", "sum_k", "bhj", "shuffles",
-          "generates", "plan_ok", "live_log")
-        .orderBy("edge")
     }
   }
 
@@ -5628,7 +5061,7 @@ object SnapshotLog {
       col("c_custkey").cast("long").as("bk_cust"),
       (col("c_custkey") % 10).cast("long").as("bk_seg"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_q225_") { tmp =>
+    withTempTableDir("graft_q225_") { tmp =>
       val (fP, fB, regRows) = q225Staged.computeIfAbsent(
         dir,
         _ => {
@@ -5766,56 +5199,6 @@ object SnapshotLog {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
         spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
-    } else {
-      // honest fallback: the same estimates from direct censuses;
-      // live_log=false fails the oracle's TRUE
-      val probe = probeRel
-      val build = buildRel
-      val (nP, nB) = (probe.count(), build.count())
-      val ndvCust = Hll.estimateInt(
-        Hll.registerCensus(probe, col("k_cust").cast("string")))
-      val ndvSeg = Hll.estimateInt(
-        Hll.registerCensus(probe, col("k_seg").cast("string")))
-      val pairPDirect = Hll.estimateInt(Hll.registerCensus(
-        probe, concat(col("k_cust").cast("string"), lit("|"),
-          col("k_seg").cast("string"))))
-      val pairBDirect = Hll.estimateInt(Hll.registerCensus(
-        build, concat(col("bk_cust").cast("string"), lit("|"),
-          col("bk_seg").cast("string"))))
-      val ndvBc = Hll.estimateInt(
-        Hll.registerCensus(build, col("bk_cust").cast("string")))
-      val ndvBs = Hll.estimateInt(
-        Hll.registerCensus(build, col("bk_seg").cast("string")))
-      val jD = probe.join(
-        build,
-        col("k_cust") === col("bk_cust") && col("k_seg") === col("bk_seg"))
-      val exactJ = jD.agg(count(lit(1))).head().getLong(0)
-      val probe2 = probe.select(col("k_cust").as("p2k"))
-      val r2 = probe2.join(jD, col("p2k") === col("k_cust"))
-        .agg(count(lit(1)), sum(col("p2k"))).head()
-      def edgeRow(edge: String, pairP: Long, pairB: Long, rows: Long) = {
-        val used = if (rows > 0L) "pair" else "product"
-        val estJ = (BigInt(nP) * BigInt(nB) /
-          BigInt(math.max(math.max(pairP, pairB), 1L))).toLong
-        val (estBytes, budget) = (estJ * 8L, nP * 8L / 2L)
-        val decision = if (estBytes <= budget) "broadcast" else "shuffle"
-        val errBp = (BigInt(estJ - exactJ) * 10000 / BigInt(exactJ)).toLong
-        (edge, used, rows, rows, nP, nB, ndvCust, ndvSeg, pairP, pairB,
-          estJ, exactJ, errBp, budget, estBytes, decision,
-          r2.getLong(0), r2.getLong(1),
-          if (decision == "broadcast") 1L else 0L, 0L, false, false)
-      }
-      val prodP = (BigInt(ndvCust) * BigInt(ndvSeg)).min(BigInt(nP)).toLong
-      val prodB = (BigInt(ndvBc) * BigInt(ndvBs)).min(BigInt(nB)).toLong
-      Seq(
-        edgeRow("e1_pair_stats", pairPDirect, pairBDirect, 64L),
-        edgeRow("e2_no_pair_stats", prodP, prodB, 0L))
-        .toDF("edge", "used", "pair_rows_probe", "pair_rows_build",
-          "n_probe", "n_build", "ndv_cust", "ndv_seg", "pair_ndv_probe",
-          "pair_ndv_build", "est_join", "exact_join", "err_bp",
-          "budget_bytes", "est_bytes", "decision", "n_second",
-          "sum_second", "bhj", "shuffles", "plan_ok", "live_log")
-        .orderBy("edge")
     }
   }
 
@@ -5956,7 +5339,7 @@ object SnapshotLog {
         (col("o_custkey") % 2).cast("long").as("g"),
         col("o_orderkey").cast("long").as("k"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_q226_") { tmp =>
+    withTempTableDir("graft_q226_") { tmp =>
       val (fB, fP, topkRows, regRows, cmsRows) = q226Staged.computeIfAbsent(
         dir,
         _ => {
@@ -6115,42 +5498,6 @@ object SnapshotLog {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
         spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
-    } else {
-      // honest fallback: direct stats; live_log=false fails the
-      // oracle's TRUE
-      val big = buildRel
-      val probe = probeRel
-      val (nB, nP) = (big.count(), probe.count())
-      def edgeRow(cn: String) = {
-        val ndvB = Hll.estimateInt(Hll.registerCensus(big, col(cn).cast("string")))
-        val perKey = big.groupBy(col(cn).as("hk")).agg(count(lit(1)).as("c"))
-        val hot = perKey
-          .filter(col("c") * 100 * ndvB / nB >= 800)
-          .select("hk").collect().map(_.getLong(0)).toSeq.sorted
-        val t1 = perKey.orderBy(col("c").desc, col("hk")).head()
-        val (t1k, t1c) = (t1.getLong(0), t1.getLong(1))
-        val skewX100 = (BigInt(t1c) * 100 * BigInt(ndvB) / BigInt(nB)).toLong
-        val hotEst = if (hot.isEmpty) 0L
-          else probe.filter(col("k").isin(hot: _*)).count()
-        val (estBytes, budget) = (hotEst * 8L, nP * 8L / 2L)
-        val strategy =
-          if (hot.isEmpty) "shuffle"
-          else if (estBytes <= budget) "split"
-          else "salted"
-        val r = probe.join(big, col("k") === col(cn))
-          .agg(count(lit(1)), sum(col("cents"))).head()
-        (cn, strategy, nP, nB, ndvB, t1k, t1c, skewX100,
-          hot.size.toLong, hotEst, estBytes, budget,
-          r.getLong(0), r.getLong(1), false,
-          if (strategy == "split") 1L else 0L, 1L, false, false)
-      }
-      Seq(edgeRow("bk_skew"), edgeRow("bk_flat"))
-        .toDF("edge", "strategy", "n_probe", "n_build", "ndv_b",
-          "top1_key", "top1_cnt", "skew_x100", "n_hot_keys",
-          "hot_probe_est", "est_bytes", "budget_bytes",
-          "n_join", "sum_cents", "census_match", "bhj", "smj",
-          "plan_ok", "live_log")
-        .orderBy("edge")
     }
   }
 
@@ -6205,7 +5552,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
     val saltCol = pmod(Hashing.h60(col("rid").cast("string")), lit(8)).cast("int")
 
-    if (DuckDbLive.available) withTempTableDir("graft_s76_") { tmp =>
+    withTempTableDir("graft_s76_") { tmp =>
       val dbFile = s"$tmp/log.duckdb"
       initLog(dbFile)
       initColNdv(dbFile)
@@ -6319,28 +5666,6 @@ object SnapshotLog {
         "skew_x100", "strategy", "audit_ok", "n_log_rows", "flipped_from_prev",
         "live_log")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: direct stats per board state; live_log=false
-      // fails the oracle's TRUE
-      def row(snap: Long) = {
-        val fact = if (snap == 1L) base.select("k", "rid", "cents")
-          else base.select("k", "rid", "cents")
-            .unionByName(delta.select("k", "rid", "cents"))
-        val n = fact.count()
-        val ndv = Hll.estimateInt(Hll.registerCensus(fact, col("k").cast("string")))
-        val t1 = fact.groupBy("k").agg(count(lit(1)).as("c"))
-          .orderBy(col("c").desc, col("k")).head()
-        val (t1k, t1c) = (t1.getLong(0), t1.getLong(1))
-        val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(n)).toLong
-        (snap, n, ndv, t1k, t1c, skew,
-          if (skew >= 800L) "salted" else "shuffle", false, 2L,
-          snap == 2L, false)
-      }
-      Seq(row(1L), row(2L))
-        .toDF("snapshot_id", "n_rows", "ndv_est", "top1_key", "top1_cnt",
-          "skew_x100", "strategy", "audit_ok", "n_log_rows",
-          "flipped_from_prev", "live_log")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -6398,7 +5723,7 @@ object SnapshotLog {
     def errBp(est: Long, exact: Long): Long =
       (BigInt(est - exact) * 10000 / BigInt(exact)).toLong
 
-    if (DuckDbLive.available) withTempTableDir("graft_s71_") { base =>
+    withTempTableDir("graft_s71_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initMor(dbFile)
@@ -6497,39 +5822,6 @@ object SnapshotLog {
           "n_fresh_stat_rows", "est_ndv", "naive_est_ndv", "exact_ndv",
           "err_bp", "naive_err_bp", "regs_match", "stale_guard_ok", "live_log")
         .orderBy("step")
-    } else {
-      // honest fallback: the same estimates from direct censuses;
-      // regs_match/stale_guard_ok/live_log=false fail the oracle's TRUE
-      def row(step: Long, pred: org.apache.spark.sql.Column) = {
-        val live = o.filter(pred)
-        val regsAll = Hll.registerCensus(o, col("cust").cast("string"))
-        val fresh03 = Hll.registerCensus(
-          o.filter(col("cust") % 4 =!= 2), col("cust").cast("string"))
-        val rec2 = Hll.registerCensus(
-          live.filter(col("cust") % 4 === 2), col("cust").cast("string"))
-        val est =
-          if (step == 1L) Hll.estimateInt(regsAll)
-          else Hll.estimateInt(Hll.mergeRegisters(fresh03, rec2))
-        val a = live.agg(count(lit(1)), countDistinct(col("cust"))).head()
-        val nStale = if (step == 1L) 0L else 1L
-        // fresh stat ROWS = Σ per-file register cells over the fresh
-        // scope (matches colNdvRowCount's long-form row count)
-        val nFreshCells = o
-          .filter(if (step == 1L) lit(true) else col("cust") % 4 =!= 2)
-          .select(pmod(col("cust"), lit(4L)).as("g"),
-            Hashing.h60(col("cust").cast("string")).as("h"))
-          .select(col("g"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-        (step, a.getLong(0), 4L, nStale, nFreshCells, est,
-          Hll.estimateInt(regsAll), a.getLong(1),
-          errBp(est, a.getLong(1)), errBp(Hll.estimateInt(regsAll), a.getLong(1)),
-          false, false, false)
-      }
-      Seq(row(1L, lit(true)), row(2L, !delPred))
-        .toDF("step", "n_live_rows", "n_files", "n_stale_files",
-          "n_fresh_stat_rows", "est_ndv", "naive_est_ndv", "exact_ndv",
-          "err_bp", "naive_err_bp", "regs_match", "stale_guard_ok", "live_log")
-        .orderBy("step")
     }
   }
 
@@ -6579,7 +5871,7 @@ object SnapshotLog {
     def errBp(est: Long, exact: Long): Long =
       (BigInt(est - exact) * 10000 / BigInt(exact)).toLong
 
-    if (DuckDbLive.available) withTempTableDir("graft_s73_") { base =>
+    withTempTableDir("graft_s73_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initMor(dbFile)
@@ -6687,39 +5979,6 @@ object SnapshotLog {
       val (row3, _) = snapRow(3L, 3L, c1 && c2 && c3)
 
       Seq(row1, row2, row3)
-        .toDF("step", "n_live_rows", "n_files", "n_stale_files",
-          "n_recompute_files", "n_pos_delete_files", "n_fresh_stat_rows",
-          "est_ndv", "naive_est_ndv", "exact_ndv", "err_bp", "naive_err_bp",
-          "regs_match", "stale_guard_ok", "live_log")
-        .orderBy("step")
-    } else {
-      // honest fallback: direct censuses; the guard/log flags false
-      // fail the oracle's TRUE
-      def row(step: Long, pred: org.apache.spark.sql.Column) = {
-        val live = o.filter(pred)
-        val regsAll = Hll.registerCensus(o, col("cust").cast("string"))
-        val liveRegs = Hll.registerCensus(live, col("cust").cast("string"))
-        val est = Hll.estimateInt(liveRegs)
-        val naive =
-          if (step == 3L) est else Hll.estimateInt(regsAll)
-        val a = live.agg(count(lit(1)), countDistinct(col("cust"))).head()
-        val nStale = if (step == 2L) 1L else 0L
-        val nFresh = o
-          .filter(if (step == 1L) lit(true) else col("cust") % 4 =!= 2)
-          .select(pmod(col("cust"), lit(4L)).as("g"),
-            Hashing.h60(col("cust").cast("string")).as("h"))
-          .select(col("g"), Hll.bucketCol.as("bucket"))
-          .distinct().count() +
-          (if (step == 3L)
-            live.filter(col("cust") % 4 === 2)
-              .select(Hashing.h60(col("cust").cast("string")).as("h"))
-              .select(Hll.bucketCol.as("bucket")).distinct().count()
-          else 0L)
-        (step, a.getLong(0), 4L, nStale, nStale, nStale, nFresh, est, naive,
-          a.getLong(1), errBp(est, a.getLong(1)), errBp(naive, a.getLong(1)),
-          false, false, false)
-      }
-      Seq(row(1L, lit(true)), row(2L, !delPred), row(3L, !delPred))
         .toDF("step", "n_live_rows", "n_files", "n_stale_files",
           "n_recompute_files", "n_pos_delete_files", "n_fresh_stat_rows",
           "est_ndv", "naive_est_ndv", "exact_ndv", "err_bp", "naive_err_bp",
@@ -6892,7 +6151,7 @@ object SnapshotLog {
     */
   def freqStatsStaleness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.ops.{Hashing, Hll}
+    import graft.ops.Hll
 
     val o = Tables
       .orders(spark, dir)
@@ -6902,7 +6161,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("rid"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s74_") { base =>
+    withTempTableDir("graft_s74_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initMor(dbFile)
@@ -7018,38 +6277,6 @@ object SnapshotLog {
           "cms_hot_fresh", "cms_hot_naive", "hot_live",
           "cms_ge_ok", "decision_ok", "stale_guard_ok", "live_log")
         .orderBy("step")
-    } else {
-      // honest fallback: direct stats both ways; guard/log flags false
-      // fail the oracle's TRUE
-      def row(step: Long) = {
-        val live = if (step == 1L) o else o.filter(col("k") =!= 1L)
-        val nMan = o.count()
-        def top1(df: DataFrame): (Long, Long) = {
-          val r = df.groupBy("k").agg(count(lit(1)).as("c"))
-            .orderBy(col("c").desc, col("k")).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        val (t1k, t1c) = top1(live)
-        val ndv = Hll.estimateInt(Hll.registerCensus(live, col("k").cast("string")))
-        val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nMan)).toLong
-        val (n1k, n1c) = top1(o)
-        val nNdv = Hll.estimateInt(Hll.registerCensus(o, col("k").cast("string")))
-        val nSkew = (BigInt(n1c) * 100 * BigInt(nNdv) / BigInt(nMan)).toLong
-        val hotLive = live.filter(col("k") === 1L).count()
-        (step, live.count(), if (step == 2L) 1L else 0L,
-          t1k, t1c, ndv, skew, skew >= 800L,
-          n1k, n1c, nSkew, nSkew >= 800L,
-          t1k, t1c, skew >= 800L,
-          hotLive, n1c, hotLive, true, true, false, false)
-      }
-      Seq(row(1L), row(2L))
-        .toDF("step", "n_live_rows", "n_stale_files",
-          "top1_key", "top1_cnt", "ndv_est", "skew_x100", "salted",
-          "naive_top1_key", "naive_top1_cnt", "naive_skew_x100", "naive_salted",
-          "top1_exact_key", "top1_exact_cnt", "exact_salted",
-          "cms_hot_fresh", "cms_hot_naive", "hot_live",
-          "cms_ge_ok", "decision_ok", "stale_guard_ok", "live_log")
-        .orderBy("step")
     }
   }
 
@@ -7091,7 +6318,7 @@ object SnapshotLog {
     */
   def freqStatsCompactionHeal(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.ops.{Hashing, Hll}
+    import graft.ops.Hll
 
     val o = Tables
       .orders(spark, dir)
@@ -7101,7 +6328,7 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("rid"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
 
-    if (DuckDbLive.available) withTempTableDir("graft_s75_") { base =>
+    withTempTableDir("graft_s75_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initMor(dbFile)
@@ -7257,42 +6484,6 @@ object SnapshotLog {
           "cms_ge_ok", "decision_ok", "naive_matches_fresh",
           "stale_guard_ok", "live_log")
         .orderBy("step")
-    } else {
-      // honest fallback: direct stats both ways; guard/log flags false
-      // fail the oracle's TRUE
-      def row(step: Long) = {
-        val live = if (step == 1L) o else o.filter(col("k") =!= 1L)
-        val nMan = o.count()
-        def top1(df: DataFrame): (Long, Long) = {
-          val r = df.groupBy("k").agg(count(lit(1)).as("c"))
-            .orderBy(col("c").desc, col("k")).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        val (t1k, t1c) = top1(live)
-        val ndv = Hll.estimateInt(Hll.registerCensus(live, col("k").cast("string")))
-        val skew = (BigInt(t1c) * 100 * BigInt(ndv) / BigInt(nMan)).toLong
-        val naive = if (step == 3L) live else o
-        val (_, n1c) = top1(naive)
-        val nNdv = Hll.estimateInt(Hll.registerCensus(naive, col("k").cast("string")))
-        val nSkew = (BigInt(n1c) * 100 * BigInt(nNdv) / BigInt(nMan)).toLong
-        val hotLive = live.filter(col("k") === 1L).count()
-        (step, live.count(),
-          if (step == 2L) 1L else 0L,
-          0L, 0L, 0L,
-          t1k, t1c, ndv, skew, skew >= 800L,
-          n1c, nSkew >= 800L,
-          skew >= 800L,
-          hotLive, n1c, hotLive, true, true, step != 2L, false, false)
-      }
-      Seq(row(1L), row(2L), row(3L))
-        .toDF("step", "n_live_rows", "n_recompute_files",
-          "n_topk_rows_fresh", "n_ndv_rows_fresh", "n_cms_rows_fresh",
-          "top1_key", "top1_cnt", "ndv_est", "skew_x100", "salted",
-          "naive_top1_cnt", "naive_salted", "exact_salted",
-          "cms_hot_fresh", "cms_hot_naive", "hot_live",
-          "cms_ge_ok", "decision_ok", "naive_matches_fresh",
-          "stale_guard_ok", "live_log")
-        .orderBy("step")
     }
   }
 
@@ -7331,12 +6522,9 @@ object SnapshotLog {
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("cust"))
 
-    def exactAndDirect(df: DataFrame): (Long, Seq[(Long, Long)]) = (
-      df.agg(countDistinct(col("cust"))).head().getLong(0),
-      Hll.registerCensus(df, col("cust").cast("string")))
     def estimate(regs: Seq[(Long, Long)]): Long = Hll.estimateInt(regs)
 
-    if (DuckDbLive.available) withTempTableDir("graft_s64_") { base =>
+    withTempTableDir("graft_s64_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -7401,27 +6589,6 @@ object SnapshotLog {
         .toDF("scope", "n_files", "n_sketch_rows", "est_ndv", "exact_ndv",
           "err_bp", "regs_match", "log_ok")
         .orderBy("scope")
-    } else {
-      // honest fallback: same estimates from predicate groupings, but
-      // regs_match/log_ok=false fail the oracle's TRUE
-      def row(scope: String, nf: Long, pred: org.apache.spark.sql.Column) = {
-        val scoped = o.filter(pred)
-        val (exact, regs) = exactAndDirect(scoped)
-        val nRows = o
-          .filter(pred)
-          .select((col("k") % 4).as("f"), Hashing.h60(col("cust").cast("string")).as("h"))
-          .select(col("f"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-        val est = estimate(regs)
-        (scope, nf, nRows, est, exact,
-          math.abs(est - exact) * 10000L / exact, false, false)
-      }
-      Seq(
-        row("all", 4L, lit(true)),
-        row("b01", 2L, col("k") % 4 < 2))
-        .toDF("scope", "n_files", "n_sketch_rows", "est_ndv", "exact_ndv",
-          "err_bp", "regs_match", "log_ok")
-        .orderBy("scope")
     }
   }
 
@@ -7479,7 +6646,7 @@ object SnapshotLog {
       (BigInt(nL) * BigInt(nR) / BigInt(math.max(ndvL, ndvR))).toLong
     def errBp(est: Long, t: Long): Long = (BigInt(est - t) * 10000 / BigInt(t)).toLong
 
-    if (DuckDbLive.available) withTempTableDir("graft_q212_") { tmp =>
+    withTempTableDir("graft_q212_") { tmp =>
       // staging (the write-once stats cost) memoized per dir — the q209
       // discipline: production stat tables are written once per table
       // version and READ by every plan; repeated bench invocations must
@@ -7589,33 +6756,6 @@ object SnapshotLog {
         .toDF("join_key", "n_left", "n_right", "ndv_left", "ndv_right",
           "est_join_rows", "true_join_rows", "err_bp", "n_stat_rows", "regs_match")
         .orderBy("join_key")
-    } else {
-      // honest fallback: same estimates from direct censuses; the stat
-      // rows come from per-file groupings without a log, and
-      // regs_match=false fails the oracle's TRUE
-      def statRows(df: DataFrame, gCol: org.apache.spark.sql.Column,
-          key: org.apache.spark.sql.Column): Long =
-        df.select(gCol.as("g"), Hashing.h60(key.cast("string")).as("h"))
-          .select(col("g"), Hll.bucketCol.as("bucket"))
-          .distinct().count()
-      def ndvOf(df: DataFrame, key: String): Long =
-        Hll.estimateInt(Hll.registerCensus(df, col(key).cast("string")))
-      val (trueOC, trueOL) = (trueOCJob(), trueOLJob())
-      val (nO, nC, nL) = (orders.count(), custT.count(), lineT.count())
-      val (ndvOc, ndvC) = (ndvOf(orders, "cust"), ndvOf(custT, "ck"))
-      val (ndvOk, ndvL2) = (ndvOf(orders, "k"), ndvOf(lineT, "lk"))
-      val e1 = estJoin(nO, nC, ndvOc, ndvC)
-      val e2 = estJoin(nO, nL, ndvOk, ndvL2)
-      val s1 = statRows(orders, col("k") % 4, col("cust")) +
-        statRows(custT, col("ck") % 2, col("ck"))
-      val s2 = statRows(orders, col("k") % 4, col("k")) +
-        statRows(lineT, col("lk") % 2, col("lk"))
-      Seq(
-        ("orders_customer", nO, nC, ndvOc, ndvC, e1, trueOC, errBp(e1, trueOC), s1, false),
-        ("orders_lineitem", nO, nL, ndvOk, ndvL2, e2, trueOL, errBp(e2, trueOL), s2, false))
-        .toDF("join_key", "n_left", "n_right", "ndv_left", "ndv_right",
-          "est_join_rows", "true_join_rows", "err_bp", "n_stat_rows", "regs_match")
-        .orderBy("join_key")
     }
   }
 
@@ -7660,11 +6800,7 @@ object SnapshotLog {
     val bw = (mxv - mn) / 4L + 1L
     val (lo, hi) = (mn + bw / 2L, mn + bw - 1L)
 
-    def exactAndDirect(df: DataFrame): (Long, Seq[(Long, Long)]) = (
-      df.agg(countDistinct(col("cust"))).head().getLong(0),
-      Hll.registerCensus(df, col("cust").cast("string")))
-
-    if (DuckDbLive.available) withTempTableDir("graft_q215_") { base =>
+    withTempTableDir("graft_q215_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initColStats(dbFile)
@@ -7715,22 +6851,6 @@ object SnapshotLog {
         () => scopeRow("all", files.map(_._1)),
         () => scopeRow("pruned", pruned))
       Seq(rowAll, rowPruned)
-        .toDF("scope", "n_files", "est_ndv", "exact_ndv", "err_bp",
-          "regs_match", "composed_ok")
-        .orderBy("scope")
-    } else {
-      // honest fallback: predicate groupings, composed_ok=false fails
-      // the oracle's TRUE
-      def row(scope: String, pred: org.apache.spark.sql.Column) = {
-        val scoped = o.filter(pred)
-        val nf = scoped.select(expr(s"(cents - $mn) div $bw")).distinct().count()
-        val (exact, regs) = exactAndDirect(scoped)
-        val est = Hll.estimateInt(regs)
-        (scope, nf, est, exact, math.abs(est - exact) * 10000L / exact, false, false)
-      }
-      Seq(
-        row("all", lit(true)),
-        row("pruned", expr(s"(cents - $mn) div $bw") === 0L))
         .toDF("scope", "n_files", "est_ndv", "exact_ndv", "err_bp",
           "regs_match", "composed_ok")
         .orderBy("scope")
@@ -7847,7 +6967,7 @@ object SnapshotLog {
       (r.getLong(0), r.getLong(1))
     }
 
-    if (DuckDbLive.available) withTempTableDir("graft_s67_") { tmp =>
+    withTempTableDir("graft_s67_") { tmp =>
       val (o8, c8, o16, c16) = s67Staged.compute(
         dir,
         (_, prev) => {
@@ -7909,14 +7029,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_buckets", "n_rows", "sum_cents",
           "exchanges_join", "census_ok", "spec_guard_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: plain-join censuses; guard untestable without
-      // the log, so spec_guard_ok=false fails the oracle's TRUE
-      val (n, s) = census(joined(ordersDf, custDf))
-      Seq((1L, 8L, n, s, 0L, true, false), (2L, 16L, n, s, 0L, true, false))
-        .toDF("snapshot_id", "n_buckets", "n_rows", "sum_cents",
-          "exchanges_join", "census_ok", "spec_guard_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -7965,7 +7077,7 @@ object SnapshotLog {
       (r.getLong(0), r.getLong(1))
     }
 
-    if (DuckDbLive.available) withTempTableDir("graft_s72_") { tmp =>
+    withTempTableDir("graft_s72_") { tmp =>
       val names = s72Staged.compute(
         dir,
         (_, prev) => {
@@ -8032,16 +7144,6 @@ object SnapshotLog {
         .toDF("snapshot_id", "n_buckets", "n_rows", "sum_cents",
           "exchanges_join", "census_ok", "accept_ok", "final_state_ok")
         .orderBy("snapshot_id")
-    } else {
-      // honest fallback: plain-join censuses; guards untestable without
-      // the log, so accept_ok/final_state_ok=false fail the oracle's TRUE
-      val (n, s) = census(joined(ordersDf, custDf))
-      Seq((1L, 8L, n, s, 0L, true, false, false),
-        (2L, 16L, n, s, 0L, true, false, false),
-        (3L, 32L, n, s, 0L, true, false, false))
-        .toDF("snapshot_id", "n_buckets", "n_rows", "sum_cents",
-          "exchanges_join", "census_ok", "accept_ok", "final_state_ok")
-        .orderBy("snapshot_id")
     }
   }
 
@@ -8077,7 +7179,7 @@ object SnapshotLog {
         s"""INSERT INTO manifest_groups VALUES ($snapshotId, $groupId,
            ${entries.map(_._2).min}, ${entries.map(_._2).max}, ${entries.size})""")
       finally st.close()
-      DuckDbLive.insertRows(c, "INSERT INTO group_entries VALUES (?, ?, ?)", entries) {
+      DuckDbLive.insertRows(c, "INSERT INTO group_entries VALUES", "(?, ?, ?)", entries) {
         (ps, o, r) =>
           ps.setLong(o + 1, groupId)
           ps.setString(o + 2, r._1)
@@ -8117,7 +7219,7 @@ object SnapshotLog {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
       .withColumn("b", col("k") % 16)
 
-    if (DuckDbLive.available) withTempTableDir("graft_s65_") { base =>
+    withTempTableDir("graft_s65_") { base =>
       val dbFile = s"$base/log.duckdb"
       initLog(dbFile)
       initStats(dbFile)
@@ -8165,19 +7267,6 @@ object SnapshotLog {
             planned.getLong(1) == direct.getLong(1))
       }
       Seq(queryRow("point_b5", 5L, 5L), queryRow("range_b6_12", 6L, 12L))
-        .toDF("query", "n_groups", "n_groups_read", "n_entries_read",
-          "n_files_scanned", "n_rows", "sum_cents", "plan_ok")
-        .orderBy("query")
-    } else {
-      // honest fallback: predicate censuses with plan_ok=false failing
-      // the oracle's TRUE
-      def row(name: String, lo: Long, hi: Long, ng: Long, ne: Long, nf: Long) = {
-        val a = o.filter(col("b") >= lo && col("b") <= hi)
-          .agg(count(lit(1)), sum(col("cents"))).head()
-        (name, 4L, ng, ne, nf, a.getLong(0), a.getLong(1), false)
-      }
-      Seq(row("point_b5", 5L, 5L, 1L, 4L, 1L),
-        row("range_b6_12", 6L, 12L, 3L, 12L, 7L))
         .toDF("query", "n_groups", "n_groups_read", "n_entries_read",
           "n_files_scanned", "n_rows", "sum_cents", "plan_ok")
         .orderBy("query")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.TempDirs
 import graft.sources.AvroSource
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -15,15 +16,7 @@ import scala.jdk.CollectionConverters._
 class AvroSourceSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  private def tmp(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case scala.util.control.NonFatal(_) => () }))
-    p.toString
-  }
+  private def tmp(prefix: String): String = TempDirs.tempDirUntilExit(prefix).toString
 
   test("round-trip preserves every mapped type, including a nulls-in-every-column row") {
     val schema = StructType(Seq(

@@ -17,7 +17,7 @@ class DuckDbLiveSpec extends AnyFunSuite {
   test("duckdb_jdbc resolves from the offline artifact cache") {
     // Rounds 5-8 each disproved an "environment-blocked" premise (imageio,
     // sound.sampled, RIFF/AVI); this pins the round-8 one: the driver jar
-    // IS reachable offline, so s01's live path must run, not fall back.
+    // IS reachable offline, so the DuckDB entries can run.
     assert(DuckDbLive.available, s"expected a duckdb_jdbc jar; found ${DuckDbLive.jarPath}")
   }
 
@@ -132,6 +132,65 @@ class DuckDbLiveSpec extends AnyFunSuite {
     }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
     assert(rows == 100L, "union of per-partition files must hold every row exactly once")
     assert(idSum == 4950L)
+  }
+
+  test("insertRows: a table whose name contains VALUES takes every chunk") {
+    // the statement prefix and the row template arrive apart, so a table
+    // name like file_values is never mistaken for the VALUES keyword;
+    // 450 rows span three chunks, the last one short
+    val db = java.nio.file.Files.createTempDirectory("graft_live_insert_").toString + "/i.db"
+    val rows = (0L until 450L).map(i => (i, s"v$i"))
+    val back = DuckDbLive.withConnection(db) { c =>
+      DuckDbLive.execute(c, "CREATE TABLE file_values(k BIGINT, v VARCHAR)")
+      DuckDbLive.insertRows(c, "INSERT INTO file_values VALUES", "(?, ?)", rows) {
+        (ps, o, r) =>
+          ps.setLong(o + 1, r._1)
+          ps.setString(o + 2, r._2)
+      }
+      DuckDbLive.queryRow(
+        c, "SELECT count(*), sum(k), count(DISTINCT v), max(v) FROM file_values")
+    }
+    assert(back(0).asInstanceOf[Number].longValue == 450L)
+    assert(back(1).asInstanceOf[Number].longValue == (0L until 450L).sum)
+    assert(back(2).asInstanceOf[Number].longValue == 450L)
+    assert(back(3).toString == "v99")
+  }
+
+  test("without the driver jar, a DuckDB entry fails in Verify with the named cause") {
+    // a child JVM whose user.home holds no artifact cache: DuckDbLive
+    // finds no jar, s39's first connection throws, and Verify records
+    // the cause beside the results instead of writing a result
+    import java.nio.file.{Files, Paths}
+    val inputArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+    val addOpens = inputArgs.zipWithIndex.flatMap {
+      case (a, i) if a == "--add-opens" => Seq(a, inputArgs(i + 1))
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case _ => Nil
+    }
+    graft.ops.TempDirs.withTempDir("graft_nojar_") { scratch =>
+      val home = Files.createDirectory(scratch.resolve("home"))
+      val out = scratch.resolve("out")
+      val log = scratch.resolve("child.log")
+      val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString) ++ addOpens ++ Seq(
+        "-Xmx1g", s"-Duser.home=$home", "-Dspark.ui.enabled=false",
+        "-cp", sys.props("java.class.path"),
+        "graft.Verify", "/root/testdata/sf0.001", out.toString, "s39_snapshot_commits")
+      val pb = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).redirectOutput(log.toFile)
+      pb.environment().put("SPARK_GRAFT_CPUS", "2")
+      val child = pb.start()
+      val exited = child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+      if (!exited) child.destroyForcibly().waitFor()
+      assert(exited, "child Verify did not finish in 300 s")
+      val record = out.resolve("s39_snapshot_commits.failed.json")
+      assert(Files.exists(record),
+        s"no failure record; child exit ${child.exitValue}, log tail:\n" +
+          Files.readAllLines(log).asScala.takeRight(20).mkString("\n"))
+      val text = Files.readString(record)
+      assert(text.contains("IllegalStateException"), text)
+      assert(text.contains("duckdb_jdbc"), text)
+      assert(!Files.exists(out.resolve("s39_snapshot_commits")),
+        "a failed entry must not leave a result for the oracle compare")
+    }
   }
 
   test("featuresF32Schema matches the pipeline's real f32 export schema") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.TempDirs
 import graft.sinks.{DuckDbLive, SnapshotLog}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +13,7 @@ class SnapshotLogSpec extends AnyFunSuite {
 
   private def withLog(f: String => Unit): Unit = {
     assume(DuckDbLive.available, "duckdb_jdbc jar not in the offline cache")
-    val base = java.nio.file.Files.createTempDirectory("graft_s39_spec_")
-    try f(s"$base/log.duckdb")
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    TempDirs.withTempDir("graft_s39_spec_")(base => f(s"$base/log.duckdb"))
   }
 
   test("bucket-spec evolution: a stale 8-bucket reader is rejected, never silently wrong") {
@@ -263,8 +258,7 @@ class SnapshotLogSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     withLog { db =>
-      val base = java.nio.file.Files.createTempDirectory("graft_s50_spec_")
-      try {
+      TempDirs.withTempDir("graft_s50_spec_") { base =>
         SnapshotLog.initLog(db)
         SnapshotLog.initSchemas(db)
         // schema 1: (1:k, 2:v); schema 2 renames v→w + adds (3:x);
@@ -294,10 +288,6 @@ class SnapshotLogSpec extends AnyFunSuite {
         // file B: x NULL despite a physical column named x (id 3 ≠ 4 —
         // 777 must NOT leak); file C: the live field 4
         assert(got == Seq((1L, 10L, None), (2L, 20L, None), (3L, 30L, Some(9L))))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }
   }
@@ -313,8 +303,7 @@ class SnapshotLogSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     withLog { db =>
-      val base = java.nio.file.Files.createTempDirectory("graft_s49_spec_")
-      try {
+      TempDirs.withTempDir("graft_s49_spec_") { base =>
         SnapshotLog.initLog(db)
         SnapshotLog.initMor(db)
         SnapshotLog.initPosDeletes(db)
@@ -343,10 +332,6 @@ class SnapshotLogSpec extends AnyFunSuite {
         // k=2: BOTH survive (same-seq equality delete must not bite);
         // k=3: untouched
         assert(got == Seq((1L, 1L), (2L, 2L), (3L, 2L)))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }
   }
