@@ -43,7 +43,7 @@ case class EmaRunning(
           s"graft_ema_run expects (double, foldable int), got (${child.dataType}, ${period.dataType})")
     }
 
-  private lazy val k: Double = 2.0 / (period.eval().asInstanceOf[Int].toDouble + 1.0)
+  private lazy val k: Double = EmaRunning.k(period.eval().asInstanceOf[Int])
 
   override def createAggregationBuffer(): EmaRunning.State = EmaRunning.State(0.0, init = false)
 
@@ -52,7 +52,7 @@ case class EmaRunning(
     if (v == null) return buf
     val x = v.asInstanceOf[Double]
     if (!buf.init) EmaRunning.State(x, init = true)
-    else EmaRunning.State(buf.ema * (1.0 - k) + x * k, init = true)
+    else EmaRunning.State(EmaRunning.step(buf.ema, x, k), init = true)
   }
 
   override def merge(a: EmaRunning.State, b: EmaRunning.State): EmaRunning.State =
@@ -87,4 +87,10 @@ case class EmaRunning(
 
 object EmaRunning {
   case class State(ema: Double, init: Boolean)
+
+  /** Smoothing factor `2 / (period + 1)`. */
+  def k(period: Int): Double = 2.0 / (period.toDouble + 1.0)
+
+  /** One EMA update — shared with the feature kernel (`pipeline.Features`). */
+  def step(ema: Double, x: Double, k: Double): Double = ema * (1.0 - k) + x * k
 }

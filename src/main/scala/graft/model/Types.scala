@@ -42,38 +42,11 @@ final case class FeaturesBar(
     Volume: Double
 )
 
-/** The engine's keyed features output row: `FeaturesBar` plus the series
-  * key — the shape `pipeline.Features.featuresFull` and the streaming
-  * analog (`streaming.StreamFeatures`) both produce.
-  */
-final case class FeaturesRow(
-    user_id: Long,
-    Close: Double,
-    Day: Long,
-    F_CloseLocationValue: Double,
-    F_MovingAverageAutocorrelation: Double,
-    F_MovingAverageDistance: Double,
-    F_MovingAverageSlope: Double,
-    F_MovingAverageSlowAutocorrelation: Double,
-    F_MovingAverageSlowDistance: Double,
-    F_OpenLocationValue: Double,
-    High: Double,
-    Low: Double,
-    Open: Double,
-    Time: Long,
-    Volume: Double
-)
-
 /** Pipeline knobs — reference `FeaturesBarConfig.cs:3-9` +
   * `StrategyAnalyzerExporter.cs:86,96-97,124-125` defaults.
   *
   * `barsRequiredToTrade`: warm-up row count before features are emitted
-  * (`FeaturesBarService.cs:44`). `emaMaxLookback`: legacy cap for the
-  * capped-fold EMA form (`Folds.emaLR` over `BarOps.wEma`) — the analog of
-  * the host's `MaximumBarsLookBack.TwoHundredFiftySix`
-  * (`StrategyAnalyzerExporter.cs:79`). The pipeline now uses the
-  * NT-faithful UNCAPPED running EMA (`graft_ema_run`), so this knob only
-  * parameterizes the legacy composed form.
+  * (`FeaturesBarService.cs:44`); the feature rings hold one more bar.
   * `tolerance`: the guard epsilon used by every feature function
   * (`Common.cs:14,29`, `Price.cs:24,32`, `MovingAverage.cs:35`).
   */
@@ -82,7 +55,6 @@ final case class FeaturesConfig(
     lookbackFast: Int = 9,
     lookbackSlow: Int = 21,
     tolerance: Double = 1e-6,
-    emaMaxLookback: Int = 256,
     timeStart: Int = 90000,
     timeEnd: Int = 155500
 )

@@ -42,18 +42,10 @@ object BarOps {
       )
   }
 
-  /** Per-series bar ordering — one hash exchange on user_id, reused by
-    * every window below (they share partitioning + ordering, so Catalyst
-    * plans a single Exchange + Sort for the whole feature stage).
+  /** Per-series bar ordering — one hash exchange on user_id, shared by
+    * the windows of the bar queries built on it.
     */
   def wSeries: WindowSpec = Window.partitionBy("user_id").orderBy("day")
-
-  /** Capped EMA fold frame (legacy composed form; the pipeline now uses
-    * the uncapped running `graft_ema_run` aggregate) — the analog of the
-    * host's MaximumBarsLookBack=256 (`StrategyAnalyzerExporter.cs:79`).
-    */
-  def wEma(maxLookback: Int): WindowSpec =
-    wSeries.rowsBetween(-(maxLookback - 1), 0)
 
   /** Trailing feature buffer frame — capacity barsRequiredToTrade+1 = 21
     * rows, mirroring the reference ring buffers (`FeaturesBarService.cs:

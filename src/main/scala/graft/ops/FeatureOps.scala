@@ -31,10 +31,18 @@ object FeatureOps {
     when(high - low < lit(tol), lit(0.0))
       .otherwise((lit(2.0) * close - high - low) / (high - low))
 
+  /** Scalar twin of `clv` — the feature kernel's form, same IEEE ops. */
+  def clv(close: Double, high: Double, low: Double, tol: Double): Double =
+    if (high - low < tol) 0.0 else (2.0 * close - high - low) / (high - low)
+
   /** Open Location Value — reference `Price.cs:32-38`. */
   def olv(open: Column, high: Column, low: Column, tol: Double = 1e-6): Column =
     when(high - low < lit(tol), lit(0.0))
       .otherwise((lit(2.0) * open - high - low) / (high - low))
+
+  /** Scalar twin of `olv`. */
+  def olv(open: Double, high: Double, low: Double, tol: Double): Double =
+    if (high - low < tol) 0.0 else (2.0 * open - high - low) / (high - low)
 
   /** Distance of close from a moving average, in percent — reference
     * `MovingAverage.cs:35-48`: `((close - ma)/ma)*100`, 0.0 when ma or
@@ -49,6 +57,11 @@ object FeatureOps {
       lit(0.0)
     ).otherwise((close - ma) / ma * lit(100.0))
 
+  /** Scalar twin of `maDistance`. */
+  def maDistance(close: Double, ma: Double, tol: Double): Double =
+    if (ma.isNaN || close.isNaN || ma.isInfinite || close.isInfinite || math.abs(ma) < tol) 0.0
+    else (close - ma) / ma * 100.0
+
   /** Slope as percent change first→last over an ordered frame — reference
     * `Common.cs:14-27`: `((last - first)/first)*100`, 0.0 when n < 2 or
     * |first| < tol. We implement the documented intent with tol = 1e-6; the
@@ -59,6 +72,10 @@ object FeatureOps {
   def slopePct(first: Column, last: Column, n: Column, tol: Double = 1e-6): Column =
     when(n < 2 || abs(first) < lit(tol), lit(0.0))
       .otherwise((last - first) / first * lit(100.0))
+
+  /** Scalar twin of `slopePct`. */
+  def slopePct(first: Double, last: Double, n: Int, tol: Double): Double =
+    if (n < 2 || math.abs(first) < tol) 0.0 else (last - first) / first * 100.0
 
   /** Clamp — reference `Common.cs:8-11` (`max(min(v, max), min)`). */
   def clamp(v: Column, lo: Double, hi: Double): Column =

@@ -23,4 +23,21 @@ object TimeCodec {
     */
   def timeInt(ts: Column): Column =
     (hour(ts) * 10000 + minute(ts) * 100 + second(ts)).cast("long")
+
+  private val MicrosPerDay = 86400000000L
+
+  /** UTC epoch day of a µs-since-epoch instant — the feature kernel's bar key. */
+  def epochDay(micros: Long): Long = Math.floorDiv(micros, MicrosPerDay)
+
+  /** yyyyMMdd of a UTC epoch day — the scalar twin of `dayInt`. */
+  def dayCode(epochDay: Long): Long = {
+    val d = java.time.LocalDate.ofEpochDay(epochDay)
+    d.getYear * 10000L + d.getMonthValue * 100L + d.getDayOfMonth
+  }
+
+  /** HHmmss of a µs-since-epoch instant in UTC — the scalar twin of `timeInt`. */
+  def timeCode(micros: Long): Long = {
+    val s = Math.floorMod(micros, MicrosPerDay) / 1000000L
+    s / 3600 * 10000L + s / 60 % 60 * 100L + s % 60
+  }
 }

@@ -152,7 +152,8 @@ object OracleSql {
 
   /** bars + EMA CTE chain ↔ Features.barsWithEma (final CTE named `ema`):
     * running EMA from partition start — unbounded frame, mirroring the
-    * graft_ema_run incremental aggregate's recurrence exactly.
+    * incremental recurrence (`EmaRunning.step`) of the feature kernel and
+    * of graft_ema_run exactly.
     */
   val emaCte: String =
     s"""$barsCte,

@@ -1,8 +1,10 @@
 package graft.pipeline
 
+import graft.functions.EmaRunning
 import graft.model.FeaturesConfig
-import graft.ops.{BarOps, FeatureOps, Folds}
+import graft.ops.{FeatureOps, TimeCodec}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
 /** The flagship feature pipeline — the Spark-native re-expression of the
@@ -10,62 +12,155 @@ import org.apache.spark.sql.functions._
   * `FeaturesBarCreator`, SURVEY.md §3.2):
   *
   *   events → day bars (O1/O2) → EMA9/EMA21 (O7) → trailing-21 feature
-  *   windows (O5/O6) → 7 `F_*` features (O8-O13) → warm-up filter (O3) →
+  *   rings (O5/O6) → 7 `F_*` features (O8-O13) → warm-up filter (O3) →
   *   14-column ordinal-sorted output (O20 schema discipline).
   *
-  * One declarative plan: Catalyst prunes the parquet scan to the three used
-  * columns, the groupBy and all window stages share a single hash exchange
-  * lineage on user_id, and every feature expression is whole-stage
-  * codegen'd except the two fold aggregates (higher-order functions).
+  * One pass per series, as the reference computes it (`FeaturesBarService.cs:
+  * 22-55` over the `CircularBuffer.cs:30-52` rings): the pruned events
+  * (user_id, µs time, value) are hash-exchanged on user_id once, sorted by
+  * time inside each partition, and a [[Series]] kernel streams each bar out
+  * as its day closes. It holds only the open bar, two running EMAs and two
+  * EMA rings of capacity barsRequiredToTrade + 1, never a whole series.
+  * `streaming.StreamFeatures` drives the same kernel from its group state,
+  * so batch and streaming share one implementation of every feature.
   */
 object Features {
 
-  /** Bars + both EMAs. EMA is computed over the per-series bar stream from
-    * partition start (capped fold frame), not day-reset — matching the
-    * reference, whose EMA indicators are attached to the raw series
-    * (`StrategyAnalyzerExporter.cs:138-139`, deviation note SURVEY.md
-    * §2.4.3).
+  /** One kernel input event: series key, µs since the epoch, price. */
+  final case class Ev(user_id: Long, micros: Long, value: Double)
+
+  /** One `enriched` row: the UTC day bar, both EMAs, the warm-up row number
+    * and the seven unrounded features.
     */
-  def barsWithEma(events: DataFrame, cfg: FeaturesConfig = FeaturesConfig()): DataFrame = {
-    // Running EMA from partition start via the graft_ema_run aggregate —
-    // O(1) state per row over an incremental running frame, no per-row
-    // array materialization, and NT-faithful (the reference's EMA
-    // indicators run over the whole loaded series with no lookback cap,
-    // StrategyAnalyzerExporter.cs:138-139). Oracle mirror: unbounded
-    // list(close) + list_reduce — bit-identical recurrence.
-    val wRun = BarOps.wSeries.rowsBetween(Long.MinValue, 0)
-    BarOps
-      .dayBars(events)
-      .withColumn("ema_fast", call_function("graft_ema_run", col("close"), lit(cfg.lookbackFast)).over(wRun))
-      .withColumn("ema_slow", call_function("graft_ema_run", col("close"), lit(cfg.lookbackSlow)).over(wRun))
+  final case class Bar(
+      user_id: Long, day: Long, time: Long, open: Double, high: Double, low: Double,
+      close: Double, volume: Long, ema_fast: Double, ema_slow: Double, rn: Int,
+      f_clv: Double, f_olv: Double, f_ma_dist: Double, f_ma_dist_slow: Double,
+      f_ma_slope: Double, f_ma_ac: Double, f_ma_ac_slow: Double)
+
+  /** Per-series kernel state: the open day bar (none while `volume == 0`),
+    * both running EMAs after `rn` closed bars, and the two EMA rings (oldest
+    * value at `head`, `len` values). Mutated in place by `add`/`commit`.
+    */
+  final case class Series(
+      var epochDay: Long, var lastMicros: Long,
+      var open: Double, var high: Double, var low: Double, var close: Double, var volume: Long,
+      var emaFast: Double, var emaSlow: Double, var rn: Int,
+      ringFast: Array[Double], ringSlow: Array[Double], var head: Int, var len: Int) {
+
+    /** Feed the next event in time order; returns the bar it closed, or
+      * null. High/low compare as Spark's max/min do (NaN greatest).
+      */
+    def add(userId: Long, e: Ev, cfg: FeaturesConfig): Bar = {
+      val d = TimeCodec.epochDay(e.micros)
+      val closed = if (volume > 0 && d != epochDay) commit(userId, cfg) else null
+      if (volume == 0) {
+        epochDay = d; open = e.value; high = e.value; low = e.value
+      } else {
+        if (SQLOrderingUtil.compareDoubles(e.value, high) > 0) high = e.value
+        if (SQLOrderingUtil.compareDoubles(e.value, low) < 0) low = e.value
+      }
+      close = e.value
+      lastMicros = e.micros
+      volume += 1
+      closed
+    }
+
+    /** Close the open bar: step both EMAs, push them into the rings, and
+      * return the bar with its features (`FeaturesBarService.cs:40-47`).
+      */
+    def commit(userId: Long, cfg: FeaturesConfig): Bar = {
+      val tol = cfg.tolerance
+      if (rn == 0) { emaFast = close; emaSlow = close }
+      else {
+        emaFast = EmaRunning.step(emaFast, close, EmaRunning.k(cfg.lookbackFast))
+        emaSlow = EmaRunning.step(emaSlow, close, EmaRunning.k(cfg.lookbackSlow))
+      }
+      val cap = ringFast.length
+      val slot = if (len < cap) { len += 1; (head + len - 1) % cap }
+      else { val h = head; head = (head + 1) % cap; h }
+      ringFast(slot) = emaFast
+      ringSlow(slot) = emaSlow
+      rn += 1
+      val bar = Bar(
+        userId, TimeCodec.dayCode(epochDay), TimeCodec.timeCode(lastMicros),
+        open, high, low, close, volume, emaFast, emaSlow, rn,
+        FeatureOps.clv(close, high, low, tol),
+        FeatureOps.olv(open, high, low, tol),
+        FeatureOps.maDistance(close, emaFast, tol),
+        FeatureOps.maDistance(close, emaSlow, tol),
+        FeatureOps.slopePct(ringFast(head), emaFast, len, tol),
+        autocorr(ringFast, tol),
+        autocorr(ringSlow, tol)
+      )
+      volume = 0
+      bar
+    }
+
+    /** Lag-1 autocorrelation of a ring, oldest first — the loop order of
+      * `FoldExpressions.AutocorrLag1.eval`, hence the same doubles.
+      */
+    private def autocorr(r: Array[Double], tol: Double): Double = {
+      val n = len
+      if (n <= 1) return 0.0
+      def at(i: Int) = r((head + i) % r.length)
+      var s = 0.0
+      var i = 0
+      while (i < n) { s = s + at(i); i += 1 }
+      val mu = s / n
+      var num = 0.0
+      i = 1
+      while (i < n) { num = num + (at(i) - mu) * (at(i - 1) - mu); i += 1 }
+      var den = 0.0
+      i = 0
+      while (i < n) { val d = at(i) - mu; den = den + d * d; i += 1 }
+      if (math.abs(den) < tol) 0.0 else num / den
+    }
+
+    /** A copy with its own rings, to close the open bar without
+      * committing it.
+      */
+    def snapshot: Series = copy(ringFast = ringFast.clone(), ringSlow = ringSlow.clone())
   }
 
-  /** Full enriched frame: every bar column, both EMAs, all seven features,
-    * and the warm-up row number. Downstream queries filter/project.
+  object Series {
+    def empty(cfg: FeaturesConfig): Series = {
+      val cap = cfg.barsRequiredToTrade + 1
+      Series(0L, 0L, 0.0, 0.0, 0.0, 0.0, 0L, 0.0, 0.0, 0, new Array(cap), new Array(cap), 0, 0)
+    }
+  }
+
+  /** The kernel's input columns, named as [[Ev]]. */
+  def kernelInput(events: DataFrame): DataFrame =
+    events.select(col("user_id"), unix_micros(col("ts")).as("micros"), col("value"))
+
+  /** Every bar of one series from its time-ordered events, lazily. */
+  private def series(cfg: FeaturesConfig)(userId: Long, evs: Iterator[Ev]): Iterator[Bar] = {
+    val s = Series.empty(cfg)
+    evs.flatMap(e => Option(s.add(userId, e, cfg))) ++
+      (if (s.volume > 0) Iterator.single(s.commit(userId, cfg)) else Iterator.empty)
+  }
+
+  /** Full enriched frame, one row per day bar: every bar column, both EMAs
+    * (running from the series start, not day-reset — the reference's EMA
+    * indicators run over the raw series, `StrategyAnalyzerExporter.cs:
+    * 138-139`, SURVEY.md §2.4.3), all seven features unrounded, and the
+    * warm-up row number `rn`. Downstream queries filter/project.
     */
   def enriched(events: DataFrame, cfg: FeaturesConfig = FeaturesConfig()): DataFrame = {
-    val tol = cfg.tolerance
-    val wb = BarOps.wBuf(cfg.barsRequiredToTrade)
-    val lFast = collect_list(col("ema_fast")).over(wb)
-    val lSlow = collect_list(col("ema_slow")).over(wb)
-    barsWithEma(events, cfg)
-      .withColumn("rn", row_number().over(BarOps.wSeries))
-      .withColumn("f_clv", FeatureOps.clv(col("close"), col("high"), col("low"), tol))
-      .withColumn("f_olv", FeatureOps.olv(col("open"), col("high"), col("low"), tol))
-      .withColumn("f_ma_dist", FeatureOps.maDistance(col("close"), col("ema_fast"), tol))
-      .withColumn("f_ma_dist_slow", FeatureOps.maDistance(col("close"), col("ema_slow"), tol))
-      .withColumn(
-        "f_ma_slope",
-        FeatureOps.slopePct(
-          first(col("ema_fast")).over(wb),
-          col("ema_fast"),
-          count(lit(1)).over(wb),
-          tol
-        )
-      )
-      .withColumn("f_ma_ac", Folds.autocorrLag1(lFast, tol))
-      .withColumn("f_ma_ac_slow", Folds.autocorrLag1(lSlow, tol))
+    val spark = events.sparkSession
+    import spark.implicits._
+    kernelInput(events)
+      .groupBy(col("user_id"))
+      .as[Long, Ev]
+      .flatMapSortedGroups(col("micros"))(series(cfg))
+      .toDF()
   }
+
+  /** Bars + both EMAs — a projection of `enriched`. */
+  def barsWithEma(events: DataFrame, cfg: FeaturesConfig = FeaturesConfig()): DataFrame =
+    enriched(events, cfg)
+      .select("user_id", "day", "time", "open", "high", "low", "close", "volume", "ema_fast", "ema_slow")
 
   /** The `FeaturesBar` output in the reference's dynamic-schema column
     * order (ordinal sort of property names, `DatabaseWriter.cs:222-225`),
@@ -78,8 +173,19 @@ object Features {
       cfg: FeaturesConfig = FeaturesConfig(),
       ordered: Boolean = true
   ): DataFrame = {
+    val out = featuresBar(enriched(events, cfg), cfg)
+    // The sort exists for oracle determinism; sinks skip it (a global sort
+    // before a write is a pure range-exchange tax — and the write path
+    // executes the plan twice: once to sample range bounds, once to write).
+    if (ordered) out.orderBy("user_id", "Day") else out
+  }
+
+  /** featuresFull's warm-up filter and projection over an enriched frame,
+    * batch or streaming.
+    */
+  def featuresBar(enriched: DataFrame, cfg: FeaturesConfig): DataFrame = {
     def r6(c: String) = FeatureOps.r6(col(c))
-    val out = enriched(events, cfg)
+    enriched
       .filter(col("rn") >= cfg.barsRequiredToTrade)
       .select(
         col("user_id"),
@@ -98,10 +204,6 @@ object Features {
         col("time").as("Time"),
         col("volume").cast("double").as("Volume")
       )
-    // The sort exists for oracle determinism; sinks skip it (a global sort
-    // before a write is a pure range-exchange tax — and the write path
-    // executes the plan twice: once to sample range bounds, once to write).
-    if (ordered) out.orderBy("user_id", "Day") else out
   }
 
   /** The exported FeaturesBar schema after the sink's float32 downcast —

@@ -3609,6 +3609,66 @@ object SnapshotLog {
       finally st.close()
     }
 
+  /** One s62 consumer micro-batch: claim the batch id in the ledger, apply
+    * the changes to the replica when the claim wins, and record the
+    * per-epoch censuses in `results`.
+    */
+  private[graft] final class CdcConsumer(s: SparkSession, dbFile: String, base: String) {
+    val results = new java.util.concurrent.ConcurrentHashMap[
+      Long, (Long, Long, Long, Long, Boolean, Long, Long, Long, Long)]()
+    @volatile var repStep = 1L
+    // the SOURCE census per snapshot is a deterministic read of
+    // committed immutable files; the redelivered batch 3 asks for the
+    // same snapshot-3 census batch 2 already computed — memoized
+    // within this run (the REPLICA census is re-read every batch on
+    // purpose: proving the replica didn't move on a rejected
+    // redelivery is the point)
+    private val srcCCache = new java.util.concurrent.ConcurrentHashMap[
+      Long, org.apache.spark.sql.Row]()
+
+    def batch(b: DataFrame, epoch: Long): Unit = {
+      val batch = b.persist()
+      // ONE bounded collect (≤3 rows): per-change-type counts AND
+      // the batch id (constant per staged file, so the max over
+      // group maxes equals the old whole-batch max)
+      val hdr = batch.groupBy(col("change_type"))
+        .agg(count(lit(1)).as("c"), max(col("batch_id")).as("mb"))
+        .collect()
+      // an empty micro-batch (no staged file) applies and records nothing
+      if (hdr.isEmpty) { batch.unpersist(); return }
+      val bid = hdr.map(_.getLong(2)).max
+      val cc = hdr.map(r => r.getString(0) -> r.getLong(1)).toMap
+      val claimed = claimApply(dbFile, bid)
+      if (claimed) {
+        val repOut = s"$base/rep${repStep + 1}"
+        s.read.parquet(s"$base/rep$repStep")
+          .join(
+            batch.filter(col("change_type").isin("delete", "update"))
+              .select(col("k")),
+            Seq("k"), "left_anti")
+          .unionByName(
+            batch.filter(col("change_type").isin("insert", "update"))
+              .select(col("k"), col("post_cents").as("cents")))
+          .repartition(2).write.parquet(repOut)
+        repStep += 1
+      }
+      // replica census and (memoized) source census are independent
+      // reads — overlapped (guide §2.6, r21)
+      val (repC, srcC) = graft.ops.Par.run2(
+        () => s.read.parquet(s"$base/rep$repStep")
+          .agg(count(lit(1)), sum(col("cents"))).head(),
+        () => srcCCache.computeIfAbsent(
+          repStep,
+          snap => s.read.parquet(manifest(dbFile, snap).map(_._1): _*)
+            .agg(count(lit(1)), sum(col("cents"))).head()))
+      results.put(epoch, (bid,
+        cc.getOrElse("delete", 0L), cc.getOrElse("update", 0L),
+        cc.getOrElse("insert", 0L), claimed,
+        repC.getLong(0), repC.getLong(1), srcC.getLong(0), srcC.getLong(1)))
+      batch.unpersist()
+    }
+  }
+
   /** s62 — STREAMING CDC CONSUMER: s56's replica maintenance as a
     * Structured Streaming job (Delta CDF consumed by a continuous
     * `foreachBatch` MERGE — the shape a 100 TB downstream replica
@@ -3742,70 +3802,21 @@ object SnapshotLog {
 
       // ---- the consumer stream ----
       val schema = s.read.parquet(s"$stage/d1.parquet").schema
-      val results = new java.util.concurrent.ConcurrentHashMap[
-        Long, (Long, Long, Long, Long, Boolean, Long, Long, Long, Long)]()
-      @volatile var repStep = 1L
-      // the SOURCE census per snapshot is a deterministic read of
-      // committed immutable files; the redelivered batch 3 asks for the
-      // same snapshot-3 census batch 2 already computed — memoized
-      // within this run (the REPLICA census is re-read every batch on
-      // purpose: proving the replica didn't move on a rejected
-      // redelivery is the point)
-      val srcCCache = new java.util.concurrent.ConcurrentHashMap[
-        Long, org.apache.spark.sql.Row]()
+      val consumer = new CdcConsumer(s, dbFile, base.toString)
       val q = s.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$stage/*.parquet")
         .writeStream
         .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (b: DataFrame, epoch: Long) =>
-          val batch = b.persist()
-          // ONE bounded collect (≤3 rows): per-change-type counts AND
-          // the batch id (constant per staged file, so the max over
-          // group maxes equals the old whole-batch max)
-          val hdr = batch.groupBy(col("change_type"))
-            .agg(count(lit(1)).as("c"), max(col("batch_id")).as("mb"))
-            .collect()
-          val bid = hdr.map(_.getLong(2)).max
-          val cc = hdr.map(r => r.getString(0) -> r.getLong(1)).toMap
-          val claimed = claimApply(dbFile, bid)
-          if (claimed) {
-            val repOut = s"$base/rep${repStep + 1}"
-            s.read.parquet(s"$base/rep$repStep")
-              .join(
-                batch.filter(col("change_type").isin("delete", "update"))
-                  .select(col("k")),
-                Seq("k"), "left_anti")
-              .unionByName(
-                batch.filter(col("change_type").isin("insert", "update"))
-                  .select(col("k"), col("post_cents").as("cents")))
-              .repartition(2).write.parquet(repOut)
-            repStep += 1
-          }
-          // replica census and (memoized) source census are independent
-          // reads — overlapped (guide §2.6, r21)
-          val (repC, srcC) = graft.ops.Par.run2(
-            () => s.read.parquet(s"$base/rep$repStep")
-              .agg(count(lit(1)), sum(col("cents"))).head(),
-            () => srcCCache.computeIfAbsent(
-              repStep,
-              snap => s.read.parquet(manifest(dbFile, snap).map(_._1): _*)
-                .agg(count(lit(1)), sum(col("cents"))).head()))
-          results.put(epoch, (bid,
-            cc.getOrElse("delete", 0L), cc.getOrElse("update", 0L),
-            cc.getOrElse("insert", 0L), claimed,
-            repC.getLong(0), repC.getLong(1), srcC.getLong(0), srcC.getLong(1)))
-          batch.unpersist()
-          ()
-        }
+        .foreachBatch((b: DataFrame, epoch: Long) => consumer.batch(b, epoch))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
 
       import scala.jdk.CollectionConverters._
-      val eps = results.asScala.toSeq.sortBy(_._1)
-      val consumeOk = eps.size == 3 && repStep == 3L &&
+      val eps = consumer.results.asScala.toSeq.sortBy(_._1)
+      val consumeOk = eps.size == 3 && consumer.repStep == 3L &&
         eps.map(_._2._5) == Seq(true, true, false) &&
         eps.forall(e => e._2._6 == e._2._8 && e._2._7 == e._2._9)
       eps.map { case (epoch, (bid, nd, nu, ni, applied, rn, rs, sn, ss)) =>

@@ -1,21 +1,21 @@
 package graft.streaming
 
-import graft.model.{FeaturesConfig, FeaturesRow}
+import graft.model.FeaturesConfig
+import graft.pipeline.Features
+import graft.pipeline.Features.{Bar, Ev, Series}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Stateful streaming feature pipeline — the `flatMapGroupsWithState`
   * re-expression of the reference's per-bar service
   * (`FeaturesBarService.cs:22-55` + ring buffers `CircularBuffer.cs:
-  * 30-52`): state per series holds the open day-bar plus bounded buffers
-  * (≤256 closes for the capped EMA fold, ≤21 EMAs for the trailing
-  * feature frame), exactly the reference's bounded-memory design.
-  *
-  * Every arithmetic step replicates the batch pipeline's Catalyst
-  * expressions operation-for-operation (same left-to-right folds, same
-  * guard order, same rounding), so the streaming output is bit-identical
-  * to `pipeline.Features.featuresFull` — and therefore to the DuckDB
-  * oracle (the driver checks s04 against the same SQL as q18).
+  * 30-52`). The group state is the batch pipeline's own per-series kernel,
+  * `pipeline.Features.Series`: the open day bar, both running EMAs and the
+  * two bounded EMA rings. Each micro-batch feeds its events to that kernel
+  * in µs order, and the bars go through `Features.featuresBar`, the batch
+  * warm-up filter and projection, so the streaming output is the batch
+  * output — and therefore the DuckDB oracle's (s04's oracle is q18's
+  * SQL).
   *
   * The bar for a series' newest (still-open) day is emitted provisionally
   * at the end of each micro-batch WITHOUT committing it to state, so a
@@ -25,149 +25,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamFeatures {
 
-  case class Ev(user_id: Long, ts: java.sql.Timestamp, value: Double)
-
-  /** Series state: open-bar accumulators, O(1) running EMAs, and the two
-    * bounded ≤21-value feature buffers (the reference's ring-buffer
-    * memory model).
-    */
-  case class SeriesState(
-      curDay: Long,
-      open: Double,
-      high: Double,
-      low: Double,
-      close: Double,
-      volume: Long,
-      lastTime: Long,
-      runFast: Double,
-      runSlow: Double,
-      emaInit: Boolean,
-      emaF: Seq[Double],
-      emaS: Seq[Double],
-      barCount: Int
-  )
-
-  private val empty =
-    SeriesState(0L, 0, 0, 0, 0, 0, 0, 0.0, 0.0, emaInit = false, Vector.empty, Vector.empty, 0)
-
-  // ---- exact mirrors of the batch Column expressions (ops.Folds /
-  // ops.FeatureOps) — identical operation order, hence identical doubles.
-
-  /** One running-EMA step — the exact update of functions.EmaRunning. */
-  private def emaStep(prev: Double, init: Boolean, x: Double, period: Int): Double = {
-    val k = 2.0 / (period + 1.0)
-    if (!init) x else prev * (1.0 - k) + x * k
-  }
-
-  private def autocorr1(xs: Seq[Double], tol: Double): Double = {
-    val n = xs.length
-    if (n <= 1) return 0.0
-    val mu = xs.foldLeft(0.0)(_ + _) / n
-    val num = (1 until n).map(i => (xs(i) - mu) * (xs(i - 1) - mu)).foldLeft(0.0)(_ + _)
-    val den = xs.map(x => (x - mu) * (x - mu)).foldLeft(0.0)(_ + _)
-    if (math.abs(den) < tol) 0.0 else num / den
-  }
-
-  private def maDist(close: Double, ma: Double, tol: Double): Double =
-    if (ma.isNaN || close.isNaN || ma.isInfinite || close.isInfinite || math.abs(ma) < tol) 0.0
-    else (close - ma) / ma * 100.0
-
-  private def slopePct(first: Double, last: Double, n: Int, tol: Double): Double =
-    if (n < 2 || math.abs(first) < tol) 0.0 else (last - first) / first * 100.0
-
-  private def clv(c: Double, h: Double, l: Double, tol: Double): Double =
-    if (h - l < tol) 0.0 else (2.0 * c - h - l) / (h - l)
-
-  private def olv(o: Double, h: Double, l: Double, tol: Double): Double =
-    if (h - l < tol) 0.0 else (2.0 * o - h - l) / (h - l)
-
-  private def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-
-  private def dayOf(ts: java.sql.Timestamp): Long = {
-    val d = java.time.LocalDateTime.ofInstant(ts.toInstant, java.time.ZoneOffset.UTC)
-    d.getYear * 10000L + d.getMonthValue * 100L + d.getDayOfMonth
-  }
-  private def timeOf(ts: java.sql.Timestamp): Long = {
-    val d = java.time.LocalDateTime.ofInstant(ts.toInstant, java.time.ZoneOffset.UTC)
-    d.getHour * 10000L + d.getMinute * 100L + d.getSecond
-  }
-
-  /** Close the open bar: commit it to the fold buffers and, past warm-up,
-    * emit the features row. Mirrors FeaturesBarService.GetFeaturesBar
-    * (add to buffers, null until count ≥ barsRequiredToTrade).
-    */
-  private def finalizeBar(
-      userId: Long,
-      st: SeriesState,
-      cfg: FeaturesConfig
-  ): (SeriesState, Option[FeaturesRow]) = {
-    val ef = emaStep(st.runFast, st.emaInit, st.close, cfg.lookbackFast)
-    val es = emaStep(st.runSlow, st.emaInit, st.close, cfg.lookbackSlow)
-    val bufF = (st.emaF :+ ef).takeRight(cfg.barsRequiredToTrade + 1)
-    val bufS = (st.emaS :+ es).takeRight(cfg.barsRequiredToTrade + 1)
-    val n = st.barCount + 1
-    val row =
-      if (n >= cfg.barsRequiredToTrade)
-        Some(
-          FeaturesRow(
-            user_id = userId,
-            Close = st.close,
-            Day = st.curDay,
-            F_CloseLocationValue = r6(clv(st.close, st.high, st.low, cfg.tolerance)),
-            F_MovingAverageAutocorrelation = r6(autocorr1(bufF, cfg.tolerance)),
-            F_MovingAverageDistance = r6(maDist(st.close, ef, cfg.tolerance)),
-            F_MovingAverageSlope = r6(slopePct(bufF.head, ef, bufF.length, cfg.tolerance)),
-            F_MovingAverageSlowAutocorrelation = r6(autocorr1(bufS, cfg.tolerance)),
-            F_MovingAverageSlowDistance = r6(maDist(st.close, es, cfg.tolerance)),
-            F_OpenLocationValue = r6(olv(st.open, st.high, st.low, cfg.tolerance)),
-            High = st.high,
-            Low = st.low,
-            Open = st.open,
-            Time = st.lastTime,
-            Volume = st.volume.toDouble
-          )
-        )
-      else None
-    (
-      st.copy(runFast = ef, runSlow = es, emaInit = true, emaF = bufF, emaS = bufS, barCount = n),
-      row
-    )
-  }
-
-  private def startBar(st: SeriesState, day: Long, time: Long, v: Double): SeriesState =
-    st.copy(curDay = day, open = v, high = v, low = v, close = v, volume = 1L, lastTime = time)
-
-  private def updateBar(st: SeriesState, time: Long, v: Double): SeriesState =
-    st.copy(
-      high = math.max(st.high, v),
-      low = math.min(st.low, v),
-      close = v,
-      volume = st.volume + 1,
-      lastTime = time
-    )
-
   private def processGroup(cfg: FeaturesConfig)(
       userId: Long,
       events: Iterator[Ev],
-      state: GroupState[SeriesState]
-  ): Iterator[FeaturesRow] = {
-    val evs = events.toVector.sortBy(_.ts.getTime)
-    var st = state.getOption.getOrElse(empty)
-    val out = Vector.newBuilder[FeaturesRow]
-    evs.foreach { e =>
-      val d = dayOf(e.ts); val t = timeOf(e.ts)
-      if (st.curDay == 0L) st = startBar(st, d, t, e.value)
-      else if (d == st.curDay) st = updateBar(st, t, e.value)
-      else {
-        val (st2, row) = finalizeBar(userId, st, cfg)
-        row.foreach(out += _)
-        st = startBar(st2, d, t, e.value)
-      }
-    }
+      state: GroupState[Series]
+  ): Iterator[Bar] = {
+    val st = state.getOption.getOrElse(Series.empty(cfg))
+    val closed = events.toVector.sortBy(_.micros).flatMap(e => Option(st.add(userId, e, cfg)))
     state.update(st)
-    // provisional emit of the still-open day (not committed to state)
-    if (st.curDay != 0L) finalizeBar(userId, st, cfg)._2.foreach(out += _)
-    out.result().iterator
+    // provisional emit of the still-open day, from a copy (not committed)
+    val open = if (st.volume > 0) Some(st.snapshot.commit(userId, cfg)) else None
+    (closed ++ open).iterator
   }
 
   /** Run the streaming feature pipeline over a parquet events path to
@@ -202,16 +70,12 @@ object StreamFeatures {
     val baseDir = java.nio.file.Paths.get(eventsPath).getParent.toString
     val reader = spark.readStream.schema(schema).option("basePath", baseDir)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val evs = graft.ops.Tables
-      .normalizeEvents(reader.parquet(s"$baseDir/$fileGlob"))
-      .select("user_id", "ts", "value")
-      .as[Ev]
-    val rows = evs
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeriesState, FeaturesRow](
-        OutputMode.Append(),
-        GroupStateTimeout.NoTimeout
-      )(processGroup(cfg))
+    val bars = Features
+      .kernelInput(graft.ops.Tables.normalizeEvents(reader.parquet(s"$baseDir/$fileGlob")))
+      .groupBy("user_id")
+      .as[Long, Ev]
+      .flatMapGroupsWithState[Series, Bar](OutputMode.Append(), GroupStateTimeout.NoTimeout)(processGroup(cfg))
+    val rows = Features.featuresBar(bars.toDF(), cfg)
     val name = "s04_feat_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = rows.writeStream
       .format("memory")

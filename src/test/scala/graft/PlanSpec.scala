@@ -39,8 +39,17 @@ class PlanSpec extends AnyFunSuite {
       }
     }
 
-  test("q18 flagship: exactly 3 exchanges (partial-agg, window lineage, final sort)") {
-    assert(count(plan("q18_features_full"), "Exchange") == 3)
+  test("q18 flagship: exactly 2 exchanges (user_id hash, final sort)") {
+    assert(count(plan("q18_features_full"), "Exchange") == 2)
+  }
+
+  test("unordered featuresFull: one exchange, no Window operator, no collect_list") {
+    val p = graft.pipeline.Features
+      .featuresFull(graft.ops.Tables.events(spark, dir), ordered = false)
+      .queryExecution.executedPlan.toString
+    assert(count(p, "Exchange") == 1)
+    assert(!p.contains("Window"))
+    assert(!p.contains("collect_list"))
   }
 
   test("q18 scan is pruned to the 3 used event columns") {

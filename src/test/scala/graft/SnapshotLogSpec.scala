@@ -528,4 +528,17 @@ class SnapshotLogSpec extends AnyFunSuite {
     // never an exception) — the f̂ ≥ f floor for an unseen key
     assert(cmsPointMin(Map.empty, 123L) == 0L)
   }
+
+  test("s62 consumer: an empty micro-batch applies and records nothing") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    TempDirs.withTempDir("graft_s62_spec_") { base =>
+      val consumer = new SnapshotLog.CdcConsumer(spark, s"$base/log.duckdb", base.toString)
+      val empty = Seq.empty[(Long, Option[Long], Option[Long], String, Long)]
+        .toDF("k", "pre_cents", "post_cents", "change_type", "batch_id")
+      consumer.batch(empty, 0L)
+      assert(consumer.results.isEmpty)
+      assert(consumer.repStep == 1L)
+    }
+  }
 }

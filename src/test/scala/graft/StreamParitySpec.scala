@@ -95,4 +95,29 @@ class StreamParitySpec extends AnyFunSuite {
       .toSeq
     assert(stream.map(_.toSeq) == batch.map(_.toSeq))
   }
+
+  test("streaming orders a day's events by microsecond, not by millisecond and file order") {
+    import spark.implicits._
+    // one user, 21 daily events; on the last day two events 300 µs apart
+    // inside one millisecond, the later one written first
+    val jan1 = 19723L * 86400000000L
+    val days = (0 until 20).map(d => (1L, jan1 + d * 86400000000L + 36000000000L, 100.0 + d))
+    val last = jan1 + 20 * 86400000000L + 36000000100L
+    val evs = days ++ Seq((1L, last + 300L, 2.0), (1L, last, 1.0))
+    graft.ops.TempDirs.withTempDir("graft_s04_us_") { dir =>
+      evs.toDF("user_id", "micros", "value")
+        .select(org.apache.spark.sql.functions.timestamp_micros($"micros").as("ts"), $"user_id", $"value")
+        .coalesce(1).write.parquet(s"$dir/_w")
+      val part = new java.io.File(s"$dir/_w").listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, dir.resolve("events.parquet"))
+      val batch = graft.pipeline.Features.featuresFull(Tables.events(spark, dir.toString))
+      val stream = graft.streaming.StreamFeatures
+        .runFeatures(spark, s"$dir/events.parquet")
+        .selectExpr(batch.columns.toIndexedSeq: _*)
+      val b = batch.collect().toSeq.map(_.toSeq)
+      assert(stream.collect().toSeq.map(_.toSeq) == b)
+      assert(batch.filter($"Day" === 20240121L).select("Open", "Close").as[(Double, Double)]
+        .collect().toSeq == Seq((1.0, 2.0)))
+    }
+  }
 }
